@@ -800,7 +800,7 @@ def _q_pip_assign_salted(spark, sf_dir):
 
     pg = pages_from_events(spark, sf_dir)
     ft = oracle_rect_features(spark)
-    assigned = assign_salted(spark, pg, ft, zoom=7, salt=16)
+    assigned = assign_salted(spark, pg, ft, zoom=7)
     return assigned.groupBy("feature_id").agg(
         F.count("*").alias("n_pages"), F.countDistinct("url").alias("n_urls")
     )

@@ -37,16 +37,15 @@ def scaling_input(spark, n: int) -> str:
     return path
 
 
-def scaling_job(spark, path: str, repartition_by_cell: bool = False) -> int:
+def scaling_job(spark, path: str) -> int:
     """The north-rule scaling workload: parquet scan of pages (with the
     planted hot z18 tile holding ~half the bbox points) -> geotag extraction
     -> z18 tile encode -> broadcast-index PIP count-refine FUSED onto the
     scan partitions (map-side combine, no point shuffle) -> tiny groupBy.
     Scan order already spreads the hot tile across all partitions, so the
     fused plan is balanced AND shuffle-free — measured 2->8 efficiency
-    0.87 vs 0.77 for the salted-shuffle variant at equal 8-core wall time
-    (the shuffle variant stays available for cell-clustered consumers and
-    is reported as a secondary pair in BENCH/BASELINE.md)."""
+    0.87 vs 0.77 for a salted-shuffle count variant at equal 8-core wall
+    time."""
     from pyspark.sql import functions as F
 
     from robosat_spark.operators.spatial_join import assign_count_by_feature
@@ -54,9 +53,7 @@ def scaling_job(spark, path: str, repartition_by_cell: bool = False) -> int:
 
     pg = spark.read.parquet(*(path if isinstance(path, list) else [path]))
     ft = features(spark).unionByName(dense_polygon_features(spark))
-    counts = assign_count_by_feature(
-        spark, pg, ft, zoom=18, salt=32, repartition_by_cell=repartition_by_cell
-    )
+    counts = assign_count_by_feature(spark, pg, ft, zoom=18)
     return counts.agg(F.sum("n_pages")).collect()[0][0]
 
 
@@ -174,7 +171,6 @@ def main():
     scaling_n = int(os.environ.get("SPARK_GRAFT_SCALING_N", "0"))
     if scaling_n:
         # scaling-evidence mode: run ONLY the big flagship count job
-        shuffle_variant = bool(int(os.environ.get("SPARK_GRAFT_SCALING_SHUFFLE", "0")))
         # point rows are tiny: big Arrow batches amortize per-batch pandas
         # overhead in the refine (the session default is sized for mask rows)
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
@@ -199,14 +195,12 @@ def main():
         )[: max(2 * cpus, 8)]  # >= one task per core: every worker warms
         scaling_job(spark, warm_files)
         t0 = time.perf_counter()
-        joined = scaling_job(spark, path, repartition_by_cell=shuffle_variant)
+        joined = scaling_job(spark, path)
         dt = time.perf_counter() - t0
         print(
             json.dumps(
                 {
-                    "metric": "pages_joined_per_sec_salted"
-                    if shuffle_variant
-                    else "pages_joined_per_sec_fused",
+                    "metric": "pages_joined_per_sec_fused",
                     "value": round(joined / dt, 1),
                     "unit": "rows/sec",
                     "queries": {"scaling_job": round(dt, 3)},

@@ -171,12 +171,24 @@ def _render_sql_step(step) -> str:
 # -- Spark (DataFrame-level: a withColumn chain keeps the plan linear) --------
 
 
+def _require_free(df: DataFrame, out: str, temps) -> None:
+    """The chains below name their temporaries ``__…`` and drop them at the
+    end, so a caller column (or ``out``) with one of those names would be
+    overwritten or dropped silently; refuse it instead. Spark resolves
+    names case-insensitively by default, so the check does too."""
+    taken = {c.lower() for c in df.columns} | {out.lower()}
+    clash = sorted(t for t in temps if t in taken)
+    if clash:
+        raise ValueError(f"column name(s) {clash} collide with the hash chain's temporaries")
+
+
 def with_murmur3_long(df: DataFrame, src: str, out: str) -> DataFrame:
     """Adds UNSIGNED 32-bit column ``out`` = spec murmur3 of long column
     ``src`` (NULL -> NULL). The ~30 temp columns are dropped; Catalyst
     keeps multiply-referenced non-cheap aliases un-inlined, so codegen
     evaluates each step once."""
     s, final = _murmur3_long_steps("__msrc")
+    _require_free(df, out, ["__msrc"] + [st[1] for st in s.steps])
     # each step references prior steps BY COLUMN NAME, so the plan is a
     # linear projection chain, not one nested expression tree
     env = {st[1]: F.col(st[1]) for st in s.steps}
@@ -190,91 +202,13 @@ def with_murmur3_long(df: DataFrame, src: str, out: str) -> DataFrame:
 
 def with_bucket_long(df: DataFrame, src: str, out: str, n: int) -> DataFrame:
     """Adds ``out`` = bucket[n] partition value of long column ``src``."""
+    _require_free(df, out, ["__mh"])
     w = with_murmur3_long(df, src, "__mh")
     w = w.withColumn(
         out,
         F.col("__mh").bitwiseAND(F.lit(_MAX_INT)).__mod__(F.lit(n)).cast("int"),
     )
     return w.drop("__mh")
-
-
-def murmur3_32_string(col: Column) -> Column:
-    """Spec 32-bit hash of a string column (UTF-8 bytes), seed 0, as
-    UNSIGNED bigint. Variable length is handled with a higher-order
-    ``aggregate`` fold over the 4-byte blocks of the hex encoding —
-    still entirely JVM-side built-ins (no UDF); the fold lambda is ONE
-    block mix, so the runtime fold carries the loop, not the plan.
-
-    COLUMN-FORM CAVEAT (r7 measurement): nesting the tail mix and the
-    final avalanche around the fold duplicates the whole fold subtree
-    through the 2-3x operand fan-out of mul32/rotl32/xor (~70 copies in
-    the final tree) — fine for literals and tiny test frames, but on a
-    real write path it cost ~17 s of Catalyst analysis plus a codegen
-    that re-evaluated the fold per duplicated reference. DataFrame
-    callers must use :func:`with_murmur3_string` /
-    :func:`with_bucket_string`, which name every step as its own column
-    exactly like the long variant's SSA chain."""
-    hx = F.hex(F.encode(col, "UTF-8"))
-    nb = F.length(F.encode(col, "UTF-8"))
-    nblocks = F.floor(nb / 4).cast("int")
-
-    def byte_at(hxc: Column, i: Column) -> Column:
-        # 1-based substring over the hex string; byte i is chars 2i+1..2i+2
-        return F.conv(F.substring(hxc, i * 2 + 1, 2), 16, 10).cast("bigint")
-
-    def mul32(x: Column, c: int) -> Column:
-        xl = x.bitwiseAND(F.lit(0xFFFF))
-        xh = F.shiftright(x, 16)
-        hi = (xh * F.lit(c)).bitwiseAND(F.lit(0xFFFF))
-        return (xl * F.lit(c) + F.shiftleft(hi, 16)).bitwiseAND(F.lit(_M32))
-
-    def rotl32(x: Column, r: int) -> Column:
-        return F.shiftleft(x, r).bitwiseAND(F.lit(_M32)).bitwiseOR(
-            F.shiftright(x, 32 - r)
-        )
-
-    def fold_step(h: Column, i: Column) -> Column:
-        base = i * 4
-        k = (
-            byte_at(hx, base)
-            + F.shiftleft(byte_at(hx, base + 1), 8)
-            + F.shiftleft(byte_at(hx, base + 2), 16)
-            + F.shiftleft(byte_at(hx, base + 3), 24)
-        )
-        k = mul32(k, _C1)
-        k = rotl32(k, 15)
-        k = mul32(k, _C2)
-        h = h.bitwiseXOR(k)
-        h = rotl32(h, 13)
-        return (mul32(h, 5) + F.lit(_MIX_ADD)).bitwiseAND(F.lit(_M32))
-
-    h = F.when(nblocks > 0, F.aggregate(
-        F.sequence(F.lit(0), nblocks - 1), F.lit(0).cast("bigint"), fold_step
-    )).otherwise(F.lit(0).cast("bigint"))
-
-    # tail (1-3 trailing bytes): k1 mix without the h-rotation
-    rem = nb % 4
-    tb = nblocks * 4
-    t0 = byte_at(hx, tb)
-    t1 = F.shiftleft(byte_at(hx, tb + 1), 8)
-    t2 = F.shiftleft(byte_at(hx, tb + 2), 16)
-    k = (
-        F.when(rem == 3, t0 + t1 + t2)
-        .when(rem == 2, t0 + t1)
-        .when(rem == 1, t0)
-        .otherwise(F.lit(0))
-    )
-    k = mul32(k, _C1)
-    k = rotl32(k, 15)
-    k = mul32(k, _C2)
-    h = F.when(rem > 0, h.bitwiseXOR(k)).otherwise(h)
-
-    h = h.bitwiseXOR(nb.cast("bigint"))
-    h = h.bitwiseXOR(F.shiftright(h, 16))
-    h = mul32(h, _FMIX1)
-    h = h.bitwiseXOR(F.shiftright(h, 13))
-    h = mul32(h, _FMIX2)
-    return h.bitwiseXOR(F.shiftright(h, 16))
 
 
 def _mul32_col(x: Column, c: int) -> Column:
@@ -298,14 +232,16 @@ _STR_TMP = (
 
 def with_murmur3_string(df: DataFrame, src: str, out: str) -> DataFrame:
     """DataFrame form of the spec string hash as an SSA withColumn chain
-    (same arithmetic as :func:`murmur3_32_string`, pinned to the same
-    spec vectors in tests/test_bucket.py): the block loop stays ONE
+    (spec string hash of the UTF-8 bytes, seed 0, as UNSIGNED bigint;
+    NULL -> NULL; pinned against ``murmur3_32_py`` in
+    tests/test_bucket.py): the block loop stays ONE
     constant-size runtime ``aggregate`` fold, and the tail mix + final
     avalanche are each a named single-step temporary, so every subtree
     is planned and codegen-evaluated exactly once. Replaced the nested
     Column form on the write path in r7: the inverted-index build over
     sf0.1 postings dropped ~60 s -> ~3 s (17 s of it pure Catalyst
     analysis of the duplicated fold)."""
+    _require_free(df, out, _STR_TMP)
     hx = F.col("__shx")
 
     def byte_at(i: Column) -> Column:
@@ -387,12 +323,9 @@ def with_murmur3_string(df: DataFrame, src: str, out: str) -> DataFrame:
     return w.drop(*_STR_TMP)
 
 
-def iceberg_bucket_string(col: Column, n: int) -> Column:
-    h = murmur3_32_string(col)
-    return h.bitwiseAND(F.lit(_MAX_INT)).__mod__(F.lit(n)).cast("int")
-
-
 def with_bucket_string(df: DataFrame, src: str, out: str, n: int) -> DataFrame:
+    """Adds ``out`` = bucket[n] partition value of string column ``src``."""
+    _require_free(df, out, ["__mhs"])
     w = with_murmur3_string(df, src, "__mhs")
     w = w.withColumn(
         out,

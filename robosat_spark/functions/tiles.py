@@ -71,17 +71,6 @@ def unpack_tile_y(tile_id: Column) -> Column:
     return tile_id.bitwiseAND(F.lit((1 << 29) - 1))
 
 
-def mercator_x(lon: Column) -> Column:
-    """EPSG:3857 x = R * radians(lon)."""
-    return F.lit(6378137.0) * F.radians(lon)
-
-
-def mercator_y(lat: Column) -> Column:
-    """EPSG:3857 y = R * ln(tan(pi/4 + lat/2))."""
-    lat_r = F.radians(_clip_lat(lat))
-    return F.lit(6378137.0) * F.log(F.tan(F.lit(3.141592653589793 / 4.0) + lat_r / F.lit(2.0)))
-
-
 def tile_lon_w(x: Column, zoom: int) -> Column:
     """West edge longitude of tile x at zoom."""
     return x.cast("double") / F.lit(float(2**zoom)) * F.lit(360.0) - F.lit(180.0)

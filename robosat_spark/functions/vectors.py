@@ -56,16 +56,6 @@ def cosine_sim_sql(a: str, b: str) -> str:
     )
 
 
-def l2_dist(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
 # Deterministic multi-table plane seeds for the near-dup scale path:
 # L=4 tables x K=8 hyperplanes. Shared by the Spark plan and its DuckDB
 # twin (oracle_sql) so the bucket ids are engine-identical.

@@ -180,34 +180,6 @@ def arc_length(ring: np.ndarray, closed: bool = True) -> float:
     return float(np.sum(np.hypot(d[:, 0], d[:, 1])))
 
 
-def segments_intersect(p1, p2, q1, q2) -> bool:
-    """Proper/improper segment intersection via orientation tests."""
-
-    def o(a, b, c):
-        v = (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])
-        return 0 if abs(v) < 1e-18 else (1 if v > 0 else -1)
-
-    def on_seg(a, b, c):
-        return (
-            min(a[0], b[0]) - 1e-18 <= c[0] <= max(a[0], b[0]) + 1e-18
-            and min(a[1], b[1]) - 1e-18 <= c[1] <= max(a[1], b[1]) + 1e-18
-        )
-
-    o1, o2 = o(p1, p2, q1), o(p1, p2, q2)
-    o3, o4 = o(q1, q2, p1), o(q1, q2, p2)
-    if o1 != o2 and o3 != o4:
-        return True
-    if o1 == 0 and on_seg(p1, p2, q1):
-        return True
-    if o2 == 0 and on_seg(p1, p2, q2):
-        return True
-    if o3 == 0 and on_seg(q1, q2, p1):
-        return True
-    if o4 == 0 and on_seg(q1, q2, p2):
-        return True
-    return False
-
-
 def rings_intersect(a: np.ndarray, b: np.ndarray) -> bool:
     """Exact polygon-intersects test (edge crossing or containment).
 

@@ -1,24 +1,30 @@
 """Point-in-polygon page->feature assignment: the flagship spatial join (J2/J3).
 
-Two physical strategies, chosen by the caller (Catalyst can't know spatial
-semantics, so the choice is explicit — SURVEY.md §4):
+Catalyst can't know spatial semantics, so the plan is chosen by name
+(SURVEY.md §4). There are two join bodies:
 
-``assign_broadcast``
-    Filter-refine with a *broadcast* cover table: pages keep their scan
-    partitioning (ZERO shuffle of the big side), the per-tile feature lists
-    and ring coordinates ride a Spark broadcast, and the exact PIP refine is
-    a vectorized Arrow batch pass. The right plan whenever the polygon side
-    fits in executor memory (the common case: features « pages).
+Broadcast filter-refine — ``assign_broadcast``, ``assign_salted``,
+``assign_count_by_feature``
+    The feature table is collected once into a per-tile index and
+    broadcast; a broadcast semi-join on the covered tiles drops every
+    point whose cell holds no feature (JVM, before any shuffle or Arrow
+    transfer); one ``mapInArrow`` refine runs the exact PIP once per
+    candidate feature per batch. The names differ only in placement and
+    readout: ``assign_broadcast`` refines on the scan partitions and
+    emits rows; ``assign_salted`` first spreads each hot cell over
+    ``SALT`` tasks (cell-clustered output; the skew path of
+    BASELINE.json north_rule) and emits rows; ``assign_count_by_feature``
+    refines on the scan partitions and emits per-(tile, feature) counts.
 
-``assign_salted``
-    Explicit salted-repartition-by-cell + per-partition spatial index
-    (BASELINE.json north_rule): pages are hashed into ``salt`` buckets
-    *within* each hot cell so one hot tile (the skew fixture holds ~50% of
-    points) spreads over many tasks; each task refines against the
-    broadcast per-tile index. The scale path when the candidate join is too
-    hot for a single task, and the evidence path for skew handling.
+Cover equi-join — ``assign_jvm``, ``assign_distributed``
+    The feature side is exploded to (tile_id, feature_id, rings) and
+    joined on tile_id with the codegen ``point_in_rings`` inside the join
+    condition: all JVM, no Python workers. ``assign_jvm`` broadcasts the
+    cover table (and ``streaming_feature_counts`` runs it on a stream);
+    ``assign_distributed`` does not, so the polygon side can be web-scale.
 
-Both refine with the same NumPy kernel; results are identical.
+``assign_auto`` picks broadcast or distributed from the feature table's
+estimated size. Every name yields the same hits.
 """
 
 from __future__ import annotations
@@ -53,7 +59,7 @@ def geotagged_points(pages: DataFrame, zoom: int) -> DataFrame:
     # deterministic, so wrapping lon/lat in an always-true
     # non-deterministic WHEN pins every downstream filter above this
     # projection, evaluating attribute references: the parse runs once,
-    # on the fanned (parallel) side. spark_partition_id() >= 0 is true
+    # on the fanned (parallel) side. The partition-id test is true
     # by construction on every task attempt (retry-safe, and legal in
     # Structured Streaming, unlike monotonically_increasing_id), so the
     # value is identical — verified exceptAll-both-ways empty on an
@@ -150,11 +156,13 @@ def _pip_pre(px, py, pres):
     return inside
 
 
-def _rows_by_feature(tids, tile_map):
-    """Bucket batch rows by candidate FEATURE (via their tile): one PIP
-    call per feature per batch instead of one per (tile, feature) —
-    fewer, larger vectorized calls (a feature's cover spans several
-    tiles, and per-call fixed cost dominated small per-tile groups)."""
+def _refine_hits(lon, lat, tids, tile_map, pre_map):
+    """The one PIP loop: yields ``(feature_id, hit_rows)`` per candidate
+    feature of a batch. Rows are bucketed by candidate FEATURE (via their
+    tile) so there is one PIP call per feature per batch instead of one
+    per (tile, feature) — fewer, larger vectorized calls (a feature's
+    cover spans several tiles, and per-call fixed cost dominated small
+    per-tile groups)."""
     order = np.argsort(tids, kind="stable")
     sorted_tids = tids[order]
     uniq = np.unique(sorted_tids)
@@ -162,43 +170,65 @@ def _rows_by_feature(tids, tile_map):
     ends = np.searchsorted(sorted_tids, uniq, side="right")
     per_fid = {}
     for t, s, e in zip(uniq.tolist(), starts.tolist(), ends.tolist()):
-        fids = tile_map.get(t)
-        if not fids:
-            continue
-        rows = order[s:e]
-        for fid in fids:
-            per_fid.setdefault(fid, []).append(rows)
-    return per_fid
-
-
-def _refine_matches(lon, lat, tids, tile_map, pre_map):
-    """Shared NumPy core: -> (row indices, feature ids) of PIP hits."""
-    out_idx, out_fid = [], []
-    for fid, row_lists in _rows_by_feature(tids, tile_map).items():
+        for fid in tile_map.get(t, ()):
+            per_fid.setdefault(fid, []).append(order[s:e])
+    for fid, row_lists in per_fid.items():
         rows = row_lists[0] if len(row_lists) == 1 else np.concatenate(row_lists)
-        inside = _pip_pre(lon[rows], lat[rows], pre_map[fid])
-        hit = rows[inside]
+        hit = rows[_pip_pre(lon[rows], lat[rows], pre_map[fid])]
         if hit.size:
-            out_idx.append(hit)
-            out_fid.append(np.full(hit.size, fid, dtype=np.int64))
-    if not out_idx:
-        return None, None
-    return np.concatenate(out_idx), np.concatenate(out_fid)
+            yield fid, hit
 
 
-def _refine_factory(bc_index):
+_ROW_COLS = ["url", "warc_ts", "lon", "lat", "tile_id"]
+_ROWS_SCHEMA = (
+    "url STRING, warc_ts TIMESTAMP, lon DOUBLE, lat DOUBLE, tile_id LONG, feature_id LONG"
+)
+_COUNTS_SCHEMA = "tile_id LONG, feature_id LONG, n LONG"
+
+
+def _emit_rows(batch, tids, hits):
+    """Row readout: the hit rows via ``RecordBatch.take`` (Arrow C++) plus
+    ``feature_id`` — the url/warc_ts payload NEVER becomes Python objects.
+    mapInArrow binds output columns POSITIONALLY to the declared schema,
+    so the order is exactly ``_ROWS_SCHEMA``'s."""
+    import pyarrow as pa
+
+    take = pa.array(np.concatenate([hit for _, hit in hits]))
+    fids = np.concatenate([np.full(hit.size, fid, dtype=np.int64) for fid, hit in hits])
+    cols = [batch.column(name).take(take) for name in _ROW_COLS]
+    return pa.RecordBatch.from_arrays(
+        cols + [pa.array(fids, type=pa.int64())], names=_ROW_COLS + ["feature_id"]
+    )
+
+
+def _emit_counts(batch, tids, hits):
+    """Count readout with MAP-SIDE COMBINE: one (tile_id, feature_id, n)
+    row per hit group instead of one row per hit — output bytes drop from
+    O(hits) to O(distinct groups per batch)."""
+    import pyarrow as pa
+
+    t_arr, f_arr, n_arr = [], [], []
+    for fid, hit in hits:
+        ts, cs = np.unique(tids[hit], return_counts=True)
+        t_arr.append(ts)
+        f_arr.append(np.full(ts.size, fid, dtype=np.int64))
+        n_arr.append(cs)
+    cols = [np.concatenate(a).astype(np.int64) for a in (t_arr, f_arr, n_arr)]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=pa.int64()) for c in cols], names=["tile_id", "feature_id", "n"]
+    )
+
+
+def _refine_factory(bc_index, emit):
     """Arrow-native PIP refine for ``mapInArrow``: numeric columns are read
-    zero-copy into NumPy, hits are materialized with ``RecordBatch.take``
-    (Arrow C++), and the url/warc_ts payload NEVER becomes Python objects.
+    zero-copy into NumPy, the edge tables are built once per task, and
+    ``emit`` turns each batch's hits into the readout's record batch.
 
-    This matters enormously at scale: the earlier pandas form turned every
+    Arrow end to end matters at scale: the earlier pandas form turned every
     url into a Python string object and back (15M allocations per 15M rows),
-    which saturated memory bandwidth — 32 workers ran no faster than 8.
-    The Arrow form keeps payload bytes in Arrow buffers end to end."""
+    which saturated memory bandwidth — 32 workers ran no faster than 8."""
 
     def refine(batches):
-        import pyarrow as pa
-
         tile_map, rings_map = bc_index.value
         pre_map = _precompute_polygons(rings_map)  # once per task (§4.5)
         for batch in batches:
@@ -207,37 +237,29 @@ def _refine_factory(bc_index):
             lon = batch.column("lon").to_numpy(zero_copy_only=False)
             lat = batch.column("lat").to_numpy(zero_copy_only=False)
             tids = batch.column("tile_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            idx, fids = _refine_matches(lon, lat, tids, tile_map, pre_map)
-            if idx is None:
-                continue
-            take = pa.array(idx)
-            # mapInArrow binds output columns POSITIONALLY to the declared
-            # schema — emit exactly the _ASSIGN_SCHEMA order
-            out_names = ["url", "warc_ts", "lon", "lat", "tile_id"]
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(name).take(take) for name in out_names]
-                + [pa.array(fids, type=pa.int64())],
-                names=out_names + ["feature_id"],
-            )
+            hits = list(_refine_hits(lon, lat, tids, tile_map, pre_map))
+            if hits:
+                yield emit(batch, tids, hits)
 
     return refine
 
 
-_ASSIGN_SCHEMA = (
-    "url STRING, warc_ts TIMESTAMP, lon DOUBLE, lat DOUBLE, tile_id LONG, feature_id LONG"
-)
+def _candidates(spark: SparkSession, pages: DataFrame, features: DataFrame, zoom: int):
+    """-> (broadcast index, prefiltered points): the filter half of
+    filter-refine. The JVM-side broadcast semi-join on the covered-tile
+    set kills every point whose cell can't contain a feature BEFORE any
+    shuffle or Arrow transfer. At web scale most points are elsewhere
+    (the world is sparse), so this is the single biggest data-volume cut
+    in the plan, kept inside whole-stage codegen."""
+    tile_map, rings_map = _collect_feature_index(features, zoom)
+    bc = spark.sparkContext.broadcast((tile_map, rings_map))
+    cover_tiles = spark.createDataFrame([(int(t),) for t in tile_map], "tile_id LONG")
+    pts = geotagged_points(pages, zoom).join(F.broadcast(cover_tiles), "tile_id", "left_semi")
+    return bc, pts
 
 
-def _tile_prefilter(spark: SparkSession, pts: DataFrame, tile_map: dict) -> DataFrame:
-    """JVM-side broadcast semi-join on the covered-tile set: kills every
-    point whose cell can't contain a feature BEFORE any shuffle or Arrow
-    transfer. At web scale most points are elsewhere (the world is sparse),
-    so this is the single biggest data-volume cut in the plan — the
-    filter half of filter-refine, kept inside whole-stage codegen."""
-    cover_tiles = spark.createDataFrame(
-        [(int(t),) for t in tile_map.keys()], "tile_id LONG"
-    )
-    return pts.join(F.broadcast(cover_tiles), "tile_id", "left_semi")
+# hash buckets each hot cell is spread over by ``assign_salted``
+SALT = 16
 
 
 def assign_broadcast(
@@ -246,127 +268,49 @@ def assign_broadcast(
     """Broadcast filter-refine PIP assignment. No shuffle of pages.
 
     Plan: scan -> regex/tile-encode (codegen) -> broadcast semi-join
-    tile prefilter (JVM) -> mapInPandas exact refine against the broadcast
+    tile prefilter (JVM) -> mapInArrow exact refine against the broadcast
     index. Candidate rows never hit a shuffle."""
-    index = _collect_feature_index(features, zoom)
-    bc = spark.sparkContext.broadcast(index)
-    pts = _tile_prefilter(spark, geotagged_points(pages, zoom), index[0])
-    return pts.mapInArrow(_refine_factory(bc), _ASSIGN_SCHEMA)
+    bc, pts = _candidates(spark, pages, features, zoom)
+    return pts.mapInArrow(_refine_factory(bc, _emit_rows), _ROWS_SCHEMA)
 
 
 def assign_salted(
-    spark: SparkSession,
-    pages: DataFrame,
-    features: DataFrame,
-    zoom: int,
-    salt: int = 16,
+    spark: SparkSession, pages: DataFrame, features: DataFrame, zoom: int
 ) -> DataFrame:
     """Salted repartition-by-cell + per-partition broadcast index.
 
-    ``repartition(salted_key)`` spreads each hot cell over ``salt`` tasks;
-    the refine is identical. Use when candidate density per tile is too
-    high for single tasks (hot-tile skew) and the downstream consumer
-    benefits from cell-clustered output (e.g. a groupBy(tile) follows —
-    the shuffle is then shared, not extra)."""
-    index = _collect_feature_index(features, zoom)
-    bc = spark.sparkContext.broadcast(index)
-    pts = _tile_prefilter(spark, geotagged_points(pages, zoom), index[0])
-    salted = pts.withColumn("salt", F.pmod(F.xxhash64("url"), F.lit(salt)).cast("int"))
+    ``repartition(tile_id, salt)`` spreads each hot cell over ``SALT``
+    tasks; the refine is identical. Use when candidate density per tile
+    is too high for single tasks (hot-tile skew) and the downstream
+    consumer benefits from cell-clustered output (e.g. a groupBy(tile)
+    follows — the shuffle is then shared, not extra)."""
+    bc, pts = _candidates(spark, pages, features, zoom)
+    salted = pts.withColumn("salt", F.pmod(F.xxhash64("url"), F.lit(SALT)).cast("int"))
     salted = salted.repartition(F.col("tile_id"), F.col("salt")).drop("salt")
-    return salted.mapInArrow(_refine_factory(bc), _ASSIGN_SCHEMA)
-
-
-def _refine_group_counts(lon, lat, tids, tile_map, pre_map):
-    """Count variant of ``_refine_matches``: per-(tile, feature) hit
-    counts via one PIP call per FEATURE (its hits are re-bucketed into
-    tiles with a cheap integer unique) — no per-hit row materialization."""
-    out = []
-    for fid, row_lists in _rows_by_feature(tids, tile_map).items():
-        rows = row_lists[0] if len(row_lists) == 1 else np.concatenate(row_lists)
-        inside = _pip_pre(lon[rows], lat[rows], pre_map[fid])
-        hit = rows[inside]
-        if hit.size:
-            ts, cs = np.unique(tids[hit], return_counts=True)
-            out.extend(
-                (int(t), fid, int(c)) for t, c in zip(ts.tolist(), cs.tolist())
-            )
-    return out
-
-
-def _count_refine_factory(bc_index):
-    """Count-only PIP refine with MAP-SIDE COMBINE: each Arrow batch emits
-    one (tile_id, feature_id, n) row per hit group instead of one row per
-    hit. The aggregation-pushdown path for count readouts — output bytes
-    drop from O(hits) to O(distinct groups per batch), and no payload
-    column ever crosses the Arrow boundary."""
-
-    def refine(batches):
-        import pyarrow as pa
-
-        tile_map, rings_map = bc_index.value
-        pre_map = _precompute_polygons(rings_map)  # once per task (§4.5)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            lon = batch.column("lon").to_numpy(zero_copy_only=False)
-            lat = batch.column("lat").to_numpy(zero_copy_only=False)
-            tids = batch.column("tile_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            groups = _refine_group_counts(lon, lat, tids, tile_map, pre_map)
-            if not groups:
-                continue
-            t_arr, f_arr, n_arr = zip(*groups)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.asarray(t_arr, dtype=np.int64), type=pa.int64()),
-                    pa.array(np.asarray(f_arr, dtype=np.int64), type=pa.int64()),
-                    pa.array(np.asarray(n_arr, dtype=np.int64), type=pa.int64()),
-                ],
-                names=["tile_id", "feature_id", "n"],
-            )
-
-    return refine
+    return salted.mapInArrow(_refine_factory(bc, _emit_rows), _ROWS_SCHEMA)
 
 
 def assign_count_by_feature(
-    spark: SparkSession,
-    pages: DataFrame,
-    features: DataFrame,
-    zoom: int,
-    salt: int = 32,
-    repartition_by_cell: bool = False,
+    spark: SparkSession, pages: DataFrame, features: DataFrame, zoom: int
 ) -> DataFrame:
     """-> (tile_id, feature_id, n_pages): the count readout of the flagship
     join with aggregation pushed THROUGH the spatial refine.
 
-    Default plan (no shuffle of points at all): scan -> geotag/encode
-    (codegen) -> broadcast semi-join prefilter -> project to the 3 numeric
-    columns the count needs (Catalyst cannot prune into a UDF, so the
-    operator does it) -> Arrow count-refine FUSED onto the scan partitions
-    with map-side combine -> tiny final groupBy. With a broadcast index the
+    Plan (no shuffle of points at all): scan -> geotag/encode (codegen) ->
+    broadcast semi-join prefilter -> project to the 3 numeric columns the
+    count needs (Catalyst cannot prune into a UDF, so the operator does
+    it) -> Arrow count-refine FUSED onto the scan partitions with
+    map-side combine -> tiny final groupBy. With a broadcast index the
     refine is embarrassingly parallel and scan order already spreads any
     hot cell across every partition — repartitioning by cell would CREATE
-    the skew the salt then has to fix, and at cluster scale the avoided
+    the skew a salt then has to fix, and at cluster scale the avoided
     candidate shuffle is network traffic, not page-cache I/O. Measured
     2->8-core scaling efficiency rose from 0.77 (salted shuffle) to 0.87
     (fused) on the 60M-row north-rule job at equal 8-core wall time.
-
-    ``repartition_by_cell=True`` restores the salted repartition for
-    consumers that need cell-clustered output partitioning (e.g. a
-    groupBy(tile) stage that reuses the exchange, or per-tile sinks)."""
-    index = _collect_feature_index(features, zoom)
-    bc = spark.sparkContext.broadcast(index)
-    pts = _tile_prefilter(spark, geotagged_points(pages, zoom), index[0])
-    slim = pts.select("lon", "lat", "tile_id")
-    if repartition_by_cell:
-        # explicit partition count: AQE would otherwise coalesce this (now
-        # byte-light) exchange down to a handful of partitions and strand
-        # the compute-heavy refine on too few tasks
-        nparts = max(salt, spark.sparkContext.defaultParallelism * 2)
-        slim = slim.withColumn(
-            "salt", F.pmod(F.hash("lon", "lat"), F.lit(salt)).cast("int")
-        ).repartition(nparts, F.col("tile_id"), F.col("salt")).drop("salt")
-    partial = slim.mapInArrow(
-        _count_refine_factory(bc), "tile_id LONG, feature_id LONG, n LONG"
+    Consumers that need cell-clustered partitioning use ``assign_salted``."""
+    bc, pts = _candidates(spark, pages, features, zoom)
+    partial = pts.select("lon", "lat", "tile_id").mapInArrow(
+        _refine_factory(bc, _emit_counts), _COUNTS_SCHEMA
     )
     return partial.groupBy("tile_id", "feature_id").agg(F.sum("n").alias("n_pages"))
 
@@ -397,50 +341,23 @@ def point_in_rings(px, py, rings):
     return total % 2 == 1
 
 
-def assign_jvm(
-    spark: SparkSession, pages: DataFrame, features: DataFrame, zoom: int
+def _cover_pip_join(
+    pts: DataFrame, features: DataFrame, zoom: int, broadcast: bool
 ) -> DataFrame:
-    """All-JVM PIP assignment: cover equi-join + codegen crossing-number.
-
-    Plan: scan -> geotag/tile-encode (codegen) -> broadcast hash join on
-    tile_id against the exploded (tile, feature, rings) cover table ->
-    ``point_in_rings`` filter — one JVM pipeline end-to-end, no shuffle of
-    pages, no Python workers. The fastest path when per-tile candidate
-    counts are modest (each candidate costs O(vertices) in codegen);
-    ``assign_salted`` remains the skew/shuffle-controlling variant."""
+    """Cover equi-join + codegen crossing-number: ``pts`` (geotagged
+    points) joined to the exploded (tile_id, feature_id, rings) cover
+    table with ``point_in_rings`` INSIDE the join condition -> the
+    ``_ROWS_SCHEMA`` columns. With ``broadcast`` the cover side carries
+    an explicit broadcast hint: one BroadcastHashJoin with the exact
+    predicate, never a sort-merge of the big point side."""
     from .cover import cover_tile_ids
 
+    rings = features.select("feature_id", "rings")
     cand_feats = cover_tile_ids(features, zoom).join(
-        F.broadcast(features.select("feature_id", "rings")), "feature_id"
+        F.broadcast(rings) if broadcast else rings, "feature_id"
     )
-    pts = geotagged_points(pages, zoom)
-    # PIP inside the join condition + explicit broadcast hint on the small
-    # side: one BroadcastHashJoin with the exact predicate, never a
-    # sort-merge of the big point side
-    cand = pts.join(
-        cand_feats.hint("broadcast"),
-        (pts["tile_id"] == cand_feats["tile_id"])
-        & point_in_rings(pts["lon"], pts["lat"], cand_feats["rings"]),
-    )
-    return cand.select(
-        "url", "warc_ts", "lon", "lat", pts["tile_id"].alias("tile_id"), "feature_id"
-    )
-
-
-def assign_distributed(
-    spark: SparkSession, pages: DataFrame, features: DataFrame, zoom: int
-) -> DataFrame:
-    """Fully distributed cover equi-join PIP: the feature side is exploded
-    to (tile_id, feature_id, rings) and hash/sort-merge-joined on tile_id —
-    NO broadcast, NO driver collect — so the polygon side can itself be
-    web-scale (the one case the broadcast-index paths cannot serve). Same
-    codegen crossing-number refine as ``assign_jvm``."""
-    from .cover import cover_tile_ids
-
-    cand_feats = cover_tile_ids(features, zoom).join(
-        features.select("feature_id", "rings"), "feature_id"
-    )
-    pts = geotagged_points(pages, zoom)
+    if broadcast:
+        cand_feats = cand_feats.hint("broadcast")
     cand = pts.join(
         cand_feats,
         (pts["tile_id"] == cand_feats["tile_id"])
@@ -449,6 +366,27 @@ def assign_distributed(
     return cand.select(
         "url", "warc_ts", "lon", "lat", pts["tile_id"].alias("tile_id"), "feature_id"
     )
+
+
+def assign_jvm(
+    spark: SparkSession, pages: DataFrame, features: DataFrame, zoom: int
+) -> DataFrame:
+    """All-JVM PIP assignment: broadcast cover equi-join + codegen
+    crossing-number — one JVM pipeline end-to-end, no shuffle of pages,
+    no Python workers. The fastest path when per-tile candidate counts
+    are modest (each candidate costs O(vertices) in codegen);
+    ``assign_salted`` remains the skew/shuffle-controlling variant."""
+    return _cover_pip_join(geotagged_points(pages, zoom), features, zoom, broadcast=True)
+
+
+def assign_distributed(
+    spark: SparkSession, pages: DataFrame, features: DataFrame, zoom: int
+) -> DataFrame:
+    """Fully distributed cover equi-join PIP: the cover table is
+    hash/sort-merge-joined on tile_id — NO broadcast, NO driver collect —
+    so the polygon side can itself be web-scale (the one case the
+    broadcast-index paths cannot serve). Same refine as ``assign_jvm``."""
+    return _cover_pip_join(geotagged_points(pages, zoom), features, zoom, broadcast=False)
 
 
 def estimate_feature_bytes(features: DataFrame) -> int:

@@ -56,8 +56,6 @@ def fan_out_small_scan(
 ) -> DataFrame:
     """Repartition a small single-file scan so downstream map work can
     use the cluster; no-op for production-scale inputs (see module doc)."""
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT"):  # measurement off-switch
-        return df
     nbytes = _input_bytes(path)
     if nbytes == 0 or nbytes > max_bytes:
         return df
@@ -66,9 +64,11 @@ def fan_out_small_scan(
     return df.repartition(int(n))
 
 
-def _split_units(path: str) -> int:
+def _split_units(path: str) -> int | None:
     """Number of independently scannable units (row groups summed over
-    files) — parquet's true split granularity. 0 if unreadable."""
+    files) — parquet's true split granularity. None when the footers
+    can't be read (no pyarrow, a missing or unreadable file, a corrupt
+    footer): the split count is then unknown."""
     try:
         import pyarrow.parquet as pq
 
@@ -82,8 +82,8 @@ def _split_units(path: str) -> int:
             ]
         )
         return sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
-    except Exception:
-        return 0
+    except (ImportError, OSError, ValueError):
+        return None
 
 
 def fan_out_unsplittable_scan(
@@ -106,20 +106,20 @@ def fan_out_unsplittable_scan(
     - if the footer already shows enough row groups to feed half the
       cluster, Spark's own split planning parallelizes the scan — no-op
       (this is what makes the helper safe for production tables where
-      writers emit 128 MB row groups);
+      writers emit 128 MB row groups); an unreadable footer (unknown
+      split count) is also a no-op;
     - above ``max_bytes`` the exchange itself would be the new wall —
       no-op (and any sane writer has produced many row groups by then).
 
     The repartition is a row-preserving round-robin of the raw scan
     columns (column pruning pushes below the exchange, so only consumed
     columns ship); every consumer is order-independent by design."""
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT"):  # measurement off-switch
-        return df
     nbytes = _input_bytes(path)
     if nbytes < min_bytes or nbytes > max_bytes:
         return df
     cores = spark.sparkContext.defaultParallelism
-    if _split_units(path) >= max(2, cores // 2):
+    units = _split_units(path)
+    if units is None or units >= max(2, cores // 2):
         return df
     n = max(2, min(cores, nbytes // per_part))
     return df.repartition(int(n))

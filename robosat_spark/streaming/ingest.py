@@ -67,26 +67,12 @@ def streaming_tile_counts(
 ) -> DataFrame:
     """Geotag -> tile encode -> tumbling-window counts per tile.
 
-    Reuses the exact batch expressions — the SAME ``geotag_*_fast``
-    variants as spatial_join.geotagged_points, so batch/stream parity holds
-    on any input, not just the fixture contract (the fast substring scan
-    and the regex variant disagree on non-trailing geo tokens)."""
-    from ..functions.tiles import geotag_lat_fast, geotag_lon_fast, pack_tile_id, tile_x, tile_y
+    Runs the batch ``spatial_join.geotagged_points`` itself (its
+    evaluation barrier included: ``spark_partition_id`` is legal in
+    Structured Streaming), so batch/stream parity holds on any input."""
+    from ..operators.spatial_join import geotagged_points
 
-    lon = geotag_lon_fast(F.col("text"))
-    lat = geotag_lat_fast(F.col("text"))
-    # always-true non-deterministic wrap: same single-evaluation barrier
-    # as batch geotagged_points (spark_partition_id is streaming-legal;
-    # without it the isNotNull filter re-inlines the parse below)
-    nd = F.spark_partition_id() >= 0
-    pts = (
-        pages.withWatermark("warc_ts", watermark)
-        .select("url", "warc_ts", F.when(nd, lon).alias("lon"), F.when(nd, lat).alias("lat"))
-        .filter(F.col("lon").isNotNull() & F.col("lat").isNotNull())
-        .withColumn(
-            "tile_id", pack_tile_id(zoom, tile_x(F.col("lon"), zoom), tile_y(F.col("lat"), zoom))
-        )
-    )
+    pts = geotagged_points(pages.withWatermark("warc_ts", watermark), zoom)
     return (
         pts.groupBy(F.window("warc_ts", window).alias("w"), F.col("tile_id"))
         .agg(F.count("*").alias("n_pages"))
@@ -173,34 +159,14 @@ def streaming_feature_counts(
     stream-static broadcast join against the exploded cover table ->
     codegen point-in-rings refine -> windowed counts per feature.
 
-    The assign_jvm plan is stateless JVM end to end, so it runs under
-    Structured Streaming unchanged — stream-static joins with a broadcast
-    static side need no state store; only the windowed count keeps state
-    (bounded by the watermark)."""
-    from ..functions.tiles import geotag_lat_fast, geotag_lon_fast, pack_tile_id, tile_x, tile_y
-    from ..operators.cover import cover_tile_ids
-    from ..operators.spatial_join import point_in_rings
+    It is the assign_jvm cover join, which is stateless JVM end to end,
+    so it runs under Structured Streaming unchanged — stream-static joins
+    with a broadcast static side need no state store; only the windowed
+    count keeps state (bounded by the watermark)."""
+    from ..operators.spatial_join import _cover_pip_join, geotagged_points
 
-    lon = geotag_lon_fast(F.col("text"))
-    lat = geotag_lat_fast(F.col("text"))
-    # same streaming-legal single-evaluation barrier as streaming_tile_counts
-    nd = F.spark_partition_id() >= 0
-    pts = (
-        pages.withWatermark("warc_ts", watermark)
-        .select("url", "warc_ts", F.when(nd, lon).alias("lon"), F.when(nd, lat).alias("lat"))
-        .filter(F.col("lon").isNotNull() & F.col("lat").isNotNull())
-        .withColumn(
-            "tile_id", pack_tile_id(zoom, tile_x(F.col("lon"), zoom), tile_y(F.col("lat"), zoom))
-        )
-    )
-    cand_feats = cover_tile_ids(features, zoom).join(
-        F.broadcast(features.select("feature_id", "rings")), "feature_id"
-    )
-    joined = pts.join(
-        cand_feats.hint("broadcast"),
-        (pts["tile_id"] == cand_feats["tile_id"])
-        & point_in_rings(pts["lon"], pts["lat"], cand_feats["rings"]),
-    )
+    pts = geotagged_points(pages.withWatermark("warc_ts", watermark), zoom)
+    joined = _cover_pip_join(pts, features, zoom, broadcast=True)
     return (
         joined.groupBy(F.window("warc_ts", window).alias("w"), F.col("feature_id"))
         .agg(F.count("*").alias("n_pages"))

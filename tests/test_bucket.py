@@ -18,12 +18,12 @@ from pyspark.sql import functions as F
 from robosat_spark.functions.bucket import (
     iceberg_bucket_long_sql_query,
     iceberg_bucket_py,
-    iceberg_bucket_string,
     murmur3_32_py,
-    murmur3_32_string,
     parse_bucket_transform,
     with_bucket_long,
+    with_bucket_string,
     with_murmur3_long,
+    with_murmur3_string,
 )
 from robosat_spark.sources.iceberg import IcebergTable, upsert, write_iceberg
 
@@ -87,20 +87,40 @@ def test_spark_long_expr_matches_python_reference(spark):
 
 def test_spark_string_expr_matches_python_reference(spark):
     """Covers every tail length (0-3 trailing bytes), the empty string,
-    multi-byte UTF-8, and a long mixed string."""
+    multi-byte UTF-8, a long mixed string, and NULL -> NULL."""
     vals = ["", "a", "ab", "abc", "abcd", "abcde", "iceberg",
             "https://example.com/path?q=1", "héllo wörld", "日本語テキスト",
-            "x" * 1000, "bbc.co.uk"]
+            "x" * 1000, "bbc.co.uk", None]
     df = spark.createDataFrame([(v,) for v in vals], "v STRING")
-    rows = df.select(
-        "v",
-        murmur3_32_string(F.col("v")).alias("h"),
-        iceberg_bucket_string(F.col("v"), 8).alias("b"),
-    ).collect()
+    w = with_murmur3_string(df, "v", "h")
+    rows = with_bucket_string(w, "v", "b", 8).collect()
+    assert {r["v"] for r in rows} == set(vals)
     for r in rows:
-        assert r["h"] == murmur3_32_py(r["v"].encode("utf-8")) & 0xFFFFFFFF, r["v"]
-        assert r["b"] == iceberg_bucket_py(r["v"], 8), r["v"]
+        if r["v"] is None:
+            assert r["h"] is None and r["b"] is None
+        else:
+            assert r["h"] == murmur3_32_py(r["v"].encode("utf-8")) & 0xFFFFFFFF, r["v"]
+            assert r["b"] == iceberg_bucket_py(r["v"], 8), r["v"]
     assert murmur3_32_py(b"iceberg") & 0xFFFFFFFF == 1210000089  # anchor
+
+
+@pytest.mark.parametrize("taken", ["__mh", "__msrc", "__m0", "__MSRC"])
+def test_long_chain_refuses_temp_name_collisions(spark, taken):
+    """A caller column named like one of the chain's temporaries would be
+    overwritten or dropped; the chain refuses it instead."""
+    df = spark.createDataFrame([(1, 2)], f"v LONG, {taken} LONG")
+    with pytest.raises(ValueError, match="collide"):
+        with_bucket_long(df, "v", "b", 16)
+
+
+@pytest.mark.parametrize("taken", ["__mhs", "__shx", "__sh5"])
+def test_string_chain_refuses_temp_name_collisions(spark, taken):
+    df = spark.createDataFrame([("a", 2)], f"v STRING, {taken} LONG")
+    with pytest.raises(ValueError, match="collide"):
+        with_bucket_string(df, "v", "b", 16)
+    # the output name is checked too: it would be dropped with the temps
+    with pytest.raises(ValueError, match="collide"):
+        with_murmur3_string(df.drop(taken), "v", "__sagg")
 
 
 @pytest.fixture()

@@ -146,26 +146,28 @@ def test_flagship_scan_prunes_payload_columns(spark, tmp_path):
     assert "url" in scan_line and "text" in scan_line
 
 
-def test_assign_count_variants_identical(spark):
-    """The fused (no-shuffle) and salted-repartition count readouts must
-    produce identical (tile, feature, n) rows — the plan choice is pure
-    physics, never semantics."""
-    from robosat_spark.operators.spatial_join import assign_count_by_feature
+def test_count_readout_matches_grouped_salted_rows(spark):
+    """Both readouts of the one refine core agree: the fused count readout
+    equals the salted row readout grouped per (tile, feature) — the plan
+    choice is pure physics, never semantics."""
+    from robosat_spark.operators.spatial_join import assign_count_by_feature, assign_salted
     from robosat_spark.sources.oracle_features import oracle_rect_features
     from robosat_spark.sources.pages import pages_from_events
 
     pg = pages_from_events(spark, "/root/testdata/sf0.001")
     ft = oracle_rect_features(spark)
-    fused = assign_count_by_feature(spark, pg, ft, zoom=7)
-    salted = assign_count_by_feature(spark, pg, ft, zoom=7, repartition_by_cell=True)
-    a = sorted(map(tuple, fused.collect()))
-    b = sorted(map(tuple, salted.collect()))
+    counts = assign_count_by_feature(spark, pg, ft, zoom=7)
+    rows = assign_salted(spark, pg, ft, zoom=7)
+    grouped = rows.groupBy("tile_id", "feature_id").count()
+    a = sorted(map(tuple, counts.select("tile_id", "feature_id", "n_pages").collect()))
+    b = sorted(map(tuple, grouped.collect()))
     assert a == b and len(a) > 0
-    # fused plan's only exchange is the tiny final groupBy; the salted
-    # variant adds the full point repartition before the refine
-    plan_f = fused._jdf.queryExecution().executedPlan().toString()
-    plan_s = salted._jdf.queryExecution().executedPlan().toString()
-    assert plan_f.count("Exchange") < plan_s.count("Exchange"), (plan_f, plan_s)
+    # same counts, fewer exchanges: the fused count plan's only shuffle is
+    # the tiny final groupBy; the salted rows add the full point
+    # repartition before the refine, then their own groupBy
+    plan_c = counts._jdf.queryExecution().executedPlan().toString()
+    plan_s = grouped._jdf.queryExecution().executedPlan().toString()
+    assert plan_c.count("Exchange") < plan_s.count("Exchange"), (plan_c, plan_s)
 
 
 def test_gate_plans_have_no_pathological_joins(spark):

@@ -373,3 +373,34 @@ def test_iceberg_sink_stream_end_to_end(spark, pages_dir, tmp_path):
     drain()  # restart on a drained checkpoint: no new batches, no new snapshots
     assert len(IcebergTable(path).snapshots()) == n_snaps
     assert IcebergTable(path).scan(spark).count() == want.count()
+
+
+def _barrier_below_geotag_filter(plan: str) -> bool:
+    """In a plan tree string: the geotag isNotNull Filter's child is the
+    non-deterministic barrier Project, and no geotag filter sits below it
+    (pushed toward the scan, where it would re-inline the parse)."""
+    lines = plan.splitlines()
+    at = next(i for i, ln in enumerate(lines) if "Filter" in ln and "isnotnull(lon" in ln)
+    child = lines[at + 1]
+    return (
+        "Project" in child
+        and "SPARK_PARTITION_ID() >= 0" in child
+        and not any("isnotnull(lon" in ln for ln in lines[at + 1:])
+    )
+
+
+def test_geotag_filter_stays_above_barrier_batch_and_stream(spark, pages_dir, tmp_path):
+    """Plan shape the scan fan depends on: Filters only push through a
+    Project whose fields are all deterministic, so the geotag isNotNull
+    filter must stay directly above the barrier Project — in batch
+    ``geotagged_points`` and in ``streaming_tile_counts``."""
+    from robosat_spark.operators.spatial_join import geotagged_points
+
+    batch = geotagged_points(spark.read.parquet(pages_dir), 12)
+    plan = batch._jdf.queryExecution().executedPlan().toString()
+    assert _barrier_below_geotag_filter(plan), plan
+
+    counts = streaming_tile_counts(streaming_pages(spark, pages_dir), zoom=12)
+    q = run_available_now(counts, str(tmp_path / "ckpt"), "barrier_plan", mode="complete")
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert _barrier_below_geotag_filter(plan), plan

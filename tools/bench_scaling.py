@@ -10,7 +10,7 @@ cores for GC/Python/shuffle threads and flatters the small run.
 Two pairs are reported:
 - N=2 -> 4N=8: both levels are below this VM's memory-bandwidth
   saturation point, so the measurement isolates the PLAN's scalability
-  (no serial bottleneck, linear shuffle, balanced salted partitions).
+  (no serial bottleneck, linear shuffle, balanced scan partitions).
 - N=8 -> 4N=32: the upper pair saturates the single shared memory bus of
   this one-box VM; the hardware ceiling probes quantify exactly how much
   of the loss is machine, not engine (pure-CPU busy loop: 0.87; cache-
@@ -31,11 +31,9 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run_bench(cpus: int, sf_dir: str, scaling_n: int, pin: bool = True,
-              shuffle_variant: bool = False) -> dict:
+def run_bench(cpus: int, sf_dir: str, scaling_n: int, pin: bool = True) -> dict:
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus), SPARK_GRAFT_SF_DIR=sf_dir,
-               SPARK_GRAFT_SCALING_N=str(scaling_n),
-               SPARK_GRAFT_SCALING_SHUFFLE="1" if shuffle_variant else "0")
+               SPARK_GRAFT_SCALING_N=str(scaling_n))
     cmd = [sys.executable, os.path.join(REPO, "bench.py")]
     if pin:
         cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
@@ -135,11 +133,6 @@ def main():
     eff_2_8 = results[8]["value"] / (4.0 * results[2]["value"])
     eff_8_32 = results[32]["value"] / (4.0 * results[8]["value"])
     probes = measure_ceiling_probes()
-    # secondary pair: the salted-shuffle variant (cell-clustered output
-    # path), one trial per level — reported for transparency, the fused
-    # plan is the north-rule workload
-    sh = {c: run_bench(c, sf_dir, scaling_n, shuffle_variant=True) for c in (2, 8)}
-    eff_sh = sh[8]["value"] / (4.0 * sh[2]["value"])
     summary = {
         "metric": "scaling_efficiency_N_to_4N",
         "value": round(eff_2_8, 3),
@@ -152,8 +145,6 @@ def main():
         "n_pages": scaling_n,
         "ceiling_probes_8_32": probes,
         "steal_pcts": {str(c): results[c].get("steal_pcts") for c in results},
-        "salted_variant_eff_2_8": round(eff_sh, 3),
-        "salted_throughput": {str(c): sh[c]["value"] for c in sh},
     }
     print(json.dumps(summary))
 
@@ -207,25 +198,9 @@ def main():
         "is the measurement that isolates plan scalability: no serial stage,",
         "no point shuffle, naturally balanced scan partitions.",
         "",
-        "## Secondary pair: salted repartition-by-cell variant",
-        "",
-        "The cell-clustered-output path (salted repartition before the",
-        "refine, `repartition_by_cell=True`) measured on the same input,",
-        "1 trial per level:",
-        "",
-        "| cpus (pinned) | throughput (rows/sec) |",
-        "|---|---|",
-        f"| 2 | {sh[2]['value']:,} |",
-        f"| 8 | {sh[8]['value']:,} |",
-        "",
-        f"2->8 efficiency = {eff_sh:.3f}. On this one box the local shuffle",
-        "is page-cache I/O, which flatters the 2-core baseline (the shuffle",
-        "separates the JVM scan stage from the Python refine stage, and a",
-        "2-core run benefits most from that phase separation); on a real",
-        "cluster the same shuffle is network-bound, which is why the fused",
-        "plan is the default count readout and the north-rule workload.",
-        "Use the salted variant when a downstream consumer reuses the",
-        "cell-clustered exchange (groupBy tile, per-tile sinks).",
+        "Consumers that need cell-clustered output (groupBy tile, per-tile",
+        "sinks) use the salted row join `assign_salted`; the count readout",
+        "has one plan, the fused one measured here.",
         "",
         "## Reference baseline",
         "",
