@@ -1464,25 +1464,25 @@ def _q_halo_stitch(spark, sf_dir):
     neighbor contribution an analytic integer (see
     ``_halo_fixture_expected``); the oracle pins all 16 counts."""
     import numpy as np
-    import pandas as pd
 
     from robosat_spark.operators.halo import stitch_halo
-    from robosat_spark.operators.rasterize import rasterize_masks
+    from robosat_spark.operators.rasterize import decode_masks, rasterize_masks
 
     ft, tiles = _seg_fixture_frames(spark, zoom=12, count=16)
     masks = rasterize_masks(spark, tiles, ft, zoom=12, size=128)
     halo = stitch_halo(spark, masks, overlap=16)
 
     def gen(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                g = np.frombuffer(r["data"], dtype=np.uint8)
-                rows.append((r["x"], r["y"], int(np.count_nonzero(g))))
-            if rows:
-                yield pd.DataFrame(rows, columns=["x", "y", "nonzero"])
+        import pyarrow as pa
 
-    return halo.mapInPandas(gen, "x LONG, y LONG, nonzero LONG")
+        for batch in batches:
+            nonzero = [np.count_nonzero(g) for *_, g in decode_masks(batch)]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("x"), batch.column("y"), pa.array(nonzero, pa.int64())],
+                names=["x", "y", "nonzero"],
+            )
+
+    return halo.mapInArrow(gen, "x LONG, y LONG, nonzero LONG")
 
 
 def _seg_fixture_tiles(zoom: int = 12, count: int = 16) -> list[tuple[int, int]]:

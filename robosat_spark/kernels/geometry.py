@@ -18,8 +18,15 @@ holes is a list of rings, ring 0 exterior.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from .mercator import project_mollweide
+
+# Arrow form of Spark's ARRAY<ARRAY<ARRAY<DOUBLE>>>: polygon -> rings ->
+# points -> [lon, lat], list fields named as Spark names them
+_POINT_TYPE = pa.list_(pa.field("element", pa.float64()))
+_RING_TYPE = pa.list_(pa.field("element", _POINT_TYPE))
+RINGS_ARROW_TYPE = pa.list_(pa.field("element", _RING_TYPE))
 
 
 def as_ring(ring) -> np.ndarray:
@@ -31,6 +38,46 @@ def as_ring(ring) -> np.ndarray:
     if not pts:
         return np.zeros((0, 2), dtype=np.float64)
     return np.stack(pts)
+
+
+def rings_from_arrow(arr) -> list:
+    """``list<list<list<double>>>`` Arrow array (or chunked array) -> per
+    row a list of (N, 2) float64 rings, ``None`` for a NULL row. The one
+    ring reader: it walks the list offsets (``.offsets`` honours a slice
+    and indexes the whole child), so no point becomes a Python object."""
+    if isinstance(arr, pa.ChunkedArray):
+        return [p for chunk in arr.chunks for p in rings_from_arrow(chunk)]
+    poly_off, ring_off = arr.offsets.to_numpy(), arr.values.offsets.to_numpy()
+    pts = arr.values.values
+    start = pts.offsets.to_numpy()[:-1]
+    coords = pts.values.to_numpy(zero_copy_only=False)
+    xy = np.column_stack([coords[start], coords[start + 1]])
+    valid = arr.is_valid().to_numpy(zero_copy_only=False)
+    return [
+        [xy[ring_off[j] : ring_off[j + 1]] for j in range(poly_off[i], poly_off[i + 1])]
+        if valid[i] else None
+        for i in range(len(arr))
+    ]
+
+
+def rings_to_arrow(polys) -> pa.Array:
+    """Per row a list of rings (anything :func:`as_ring` takes) or ``None``
+    -> ``list<list<list<double>>>`` Arrow array; the one ring writer."""
+    rows = [None if p is None else [as_ring(r)[:, :2] for r in p] for p in polys]
+    rings = [r for row in rows if row for r in row]
+
+    def lists(counts, values, type_, mask=None):
+        offsets = np.concatenate([[0], np.cumsum(counts, dtype=np.int64)]).astype(np.int32)
+        return pa.ListArray.from_arrays(pa.array(offsets), values, type=type_, mask=mask)
+
+    coords = np.concatenate([r.ravel() for r in rings]) if rings else np.zeros(0)
+    points = lists(np.full(len(coords) // 2, 2), pa.array(coords, pa.float64()), _POINT_TYPE)
+    return lists(
+        [len(row or ()) for row in rows],
+        lists([len(r) for r in rings], points, _RING_TYPE),
+        RINGS_ARROW_TYPE,
+        mask=pa.array([row is None for row in rows], pa.bool_()),
+    )
 
 
 def close_ring(ring: np.ndarray) -> np.ndarray:

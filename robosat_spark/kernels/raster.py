@@ -195,7 +195,11 @@ def find_contours(mask: np.ndarray):
 
                 pts = _follow_border(f, i, j, start_dir, nbd)
                 contours.append(pts)
-                info.append({"parent": parent, "is_hole": is_hole})
+                # Suzuki-Abe step 1: the outer test wins, so a one-pixel
+                # apex start is an outer border (the NBD bookkeeping above
+                # still files it as a hole; the pinned raster digest
+                # depends on the parents that gives)
+                info.append({"parent": parent, "is_hole": is_hole and not outer})
             if row[j] != 1:
                 lnbd = abs(row[j])
 

@@ -49,13 +49,12 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         .distinct()
     )
     sym = sym.localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    conf_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    conf_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # scale-adaptive round partitioning (r7, same rationale as
     # operators/graph.pagerank): each round shuffles label/edge-vector
     # data whose size the (already materialized) symmetrized edge set
-    # bounds, so partition count follows a cheap count of it instead of
-    # the session-wide constant; conf stays the cap, restored on exit
+    # bounds, so each round's group input is repartitioned to a count that
+    # follows a cheap count of it; the session conf is only the cap
     n_part = max(1, min(conf_part, -(-sym.count() // 8192)))
 
     labels = sym.select(F.col("src").alias("node")).distinct().withColumn("component", F.col("node"))
@@ -65,45 +64,41 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
             F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
 
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-    try:
-        # initial sum (identity labels — a cheap distinct over the pinned
-        # edge set) so a first round that moves nothing already terminates
-        prev_sum = label_sum(labels)
-        for _ in range(max_iter):
-            # (a) candidate labels: own label + each neighbor's label
-            nbr = (
-                sym.join(labels.withColumnRenamed("node", "dst2"), sym["dst"] == F.col("dst2"))
-                .select(F.col("src").alias("node"), "component")
+    # initial sum (identity labels — a cheap distinct over the pinned
+    # edge set) so a first round that moves nothing already terminates
+    prev_sum = label_sum(labels)
+    for _ in range(max_iter):
+        # (a) candidate labels: own label + each neighbor's label
+        nbr = sym.join(
+            labels.withColumnRenamed("node", "dst2"), sym["dst"] == F.col("dst2")
+        ).select(F.col("src").alias("node"), "component")
+        hop = (
+            labels.unionByName(nbr)
+            .repartition(n_part, "node")
+            .groupBy("node")
+            .agg(F.min("component").alias("component"))
+        )
+        # (b) shortcut: follow my label's label (pointer doubling)
+        parent = hop.select(
+            F.col("node").alias("p_node"), F.col("component").alias("p_comp")
+        )
+        new_labels = (
+            hop.join(parent, hop["component"] == parent["p_node"], "left")
+            .select(
+                "node",
+                F.least(
+                    F.col("component"), F.coalesce(F.col("p_comp"), F.col("component"))
+                ).alias("component"),
             )
-            hop = (
-                labels.unionByName(nbr)
-                .groupBy("node")
-                .agg(F.min("component").alias("component"))
-            )
-            # (b) shortcut: follow my label's label (pointer doubling)
-            parent = hop.select(
-                F.col("node").alias("p_node"), F.col("component").alias("p_comp")
-            )
-            new_labels = (
-                hop.join(parent, hop["component"] == parent["p_node"], "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("component"), F.coalesce(F.col("p_comp"), F.col("component"))
-                    ).alias("component"),
-                )
-            )
-            new_labels = new_labels.localCheckpoint(eager=True)
-            # fixpoint: monotone label sum unchanged -> no label moved
-            new_sum = label_sum(new_labels)
-            changed = new_sum != prev_sum
-            prev_sum = new_sum
-            labels = new_labels
-            if not changed:
-                break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(conf_part))
+        )
+        new_labels = new_labels.localCheckpoint(eager=True)
+        # fixpoint: monotone label sum unchanged -> no label moved
+        new_sum = label_sum(new_labels)
+        changed = new_sum != prev_sum
+        prev_sum = new_sum
+        labels = new_labels
+        if not changed:
+            break
     return labels
 
 

@@ -2,21 +2,20 @@
 
 Reference behavior: per-feature ``burntiles.burn`` then set-union
 (/root/reference/robosat/tools/cover.py:23-37). Here: Arrow-batched
-``mapInPandas`` running the exact NumPy cover kernel, then ``distinct()``
+``mapInArrow`` running the exact NumPy cover kernel on rings read by the
+ring codec (``geometry.rings_from_arrow``), then ``distinct()``
 (Catalyst partial+final hash agg = the set union, SURVEY.md §3.1).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.tiles import pack_tile_id
-from ..kernels.geometry import as_ring
+from ..kernels.geometry import rings_from_arrow
 from ..kernels.raster import cover_rings
 
 
@@ -29,26 +28,18 @@ def cover(features: DataFrame, zoom: int, keep_feature_id: bool = True) -> DataF
 
     out_schema = "feature_id LONG, z INT, x LONG, y LONG"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fids, xs, ys = [], [], []
-            for fid, rings in zip(pdf["feature_id"], pdf["rings"]):
-                tiles = cover_rings([as_ring(r) for r in rings], zoom)
-                if len(tiles):
-                    fids.append(np.full(len(tiles), fid, dtype=np.int64))
-                    xs.append(tiles[:, 0])
-                    ys.append(tiles[:, 1])
-            if fids:
-                yield pd.DataFrame(
-                    {
-                        "feature_id": np.concatenate(fids),
-                        "z": np.int32(zoom),
-                        "x": np.concatenate(xs),
-                        "y": np.concatenate(ys),
-                    }
-                )
+    def gen(batches):
+        for batch in batches:
+            tiles = [cover_rings(rings, zoom) for rings in rings_from_arrow(batch.column("rings"))]
+            fid = np.repeat(batch.column("feature_id").to_numpy(), [len(t) for t in tiles])
+            xy = np.vstack([np.zeros((0, 2), np.int64), *tiles])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(fid, pa.int64()), pa.array(np.full(len(fid), zoom, np.int32)),
+                 pa.array(xy[:, 0], pa.int64()), pa.array(xy[:, 1], pa.int64())],
+                names=["feature_id", "z", "x", "y"],
+            )
 
-    covered = features.select("feature_id", "rings").mapInPandas(gen, out_schema)
+    covered = features.select("feature_id", "rings").mapInArrow(gen, out_schema)
     if keep_feature_id:
         return covered
     return covered.select("z", "x", "y").distinct()

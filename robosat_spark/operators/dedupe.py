@@ -16,8 +16,9 @@ Spark shape (J4), fully distributed and shuffle-lean:
      two slim cell tables, deduped to (pred_id, osm_id);
   3. ring payloads join onto the deduped pair set (merge.py shape), so
      each ring crosses the shuffle once per PAIR, not once per cell;
-  4. groupBy(pred_id).applyInPandas: cheap exact ``intersects`` refine
-     first, then IoU only on survivors — EXACT clipping IoU
+  4. groupBy(pred_id).applyInArrow, rings read from the Arrow list
+     offsets (``geometry.rings_from_arrow``): cheap exact ``intersects``
+     refine first, then IoU only on survivors — EXACT clipping IoU
      (triangulation + convex clip, concave/holed polygons included) when
      a single candidate intersects, so keep/drop verdicts at the 0.5
      threshold carry no raster quantization; supersampled raster IoU for
@@ -27,8 +28,7 @@ Spark shape (J4), fully distributed and shuffle-lean:
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,12 +36,6 @@ from ..functions.tiles import tile_x, tile_y
 from ..kernels import geometry as G
 
 DEDUP_SCHEMA = "pred_id LONG, iou DOUBLE, n_candidates INT, keep BOOLEAN"
-
-
-def _rings_np(rings):
-    return [
-        np.vstack([np.asarray(p, dtype=np.float64) for p in ring]) for ring in rings
-    ]
 
 
 def _cover_cells(features: DataFrame, id_col: str, cell_zoom: int) -> DataFrame:
@@ -97,23 +91,29 @@ def dedupe(
     )
     cand = pairs.join(pred_payload, "pred_id").join(osm_payload, "osm_id", "left_outer")
 
-    def judge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        pred_rings = _rings_np(pdf["pred_rings"].iloc[0])
+    def judge(key, table):
+        pid = key[0].as_py()
+
+        def verdict(iou, n, keep):
+            return pa.table({
+                "pred_id": pa.array([pid], pa.int64()), "iou": pa.array([float(iou)], pa.float64()),
+                "n_candidates": pa.array([n], pa.int32()), "keep": pa.array([bool(keep)], pa.bool_()),
+            })
+
+        pred_rings = G.rings_from_arrow(table.column("pred_rings").slice(0, 1))[0]
         cands = [
-            (int(o), _rings_np(r))
-            for o, r in zip(pdf["osm_id"], pdf["osm_rings"])
-            if pd.notna(o)
+            rings
+            for o, rings in zip(table.column("osm_id").to_pylist(),
+                                G.rings_from_arrow(table.column("osm_rings")))
+            if o is not None
         ]
         if not cands:  # no bbox candidates -> keep (dedupe.py:51-52)
-            return pd.DataFrame([(pid, 0.0, 0, True)],
-                                columns=["pred_id", "iou", "n_candidates", "keep"])
+            return verdict(0.0, 0, True)
         intersecting = [
-            rings for _, rings in cands if G.rings_intersect(pred_rings[0], rings[0])
+            rings for rings in cands if G.rings_intersect(pred_rings[0], rings[0])
         ]
         if not intersecting:  # none intersect -> keep (dedupe.py:58-59)
-            return pd.DataFrame([(pid, 0.0, len(cands), True)],
-                                columns=["pred_id", "iou", "n_candidates", "keep"])
+            return verdict(0.0, len(cands), True)
         iou = None
         if len(intersecting) == 1:
             # exact clipping IoU (triangulate + convex clip; concave and
@@ -125,12 +125,9 @@ def dedupe(
             # candidates is not worth exactness) and degenerate rings take
             # the supersampled raster path
             iou = G.raster_iou_multi([pred_rings], intersecting, resolution=iou_resolution)
-        return pd.DataFrame(
-            [(pid, float(iou), len(cands), bool(iou < threshold))],
-            columns=["pred_id", "iou", "n_candidates", "keep"],
-        )
+        return verdict(iou, len(cands), iou < threshold)
 
-    return cand.groupBy("pred_id").applyInPandas(judge, DEDUP_SCHEMA)
+    return cand.groupBy("pred_id").applyInArrow(judge, DEDUP_SCHEMA)
 
 
 def dedupe_kept_features(predicted: DataFrame, verdicts: DataFrame) -> DataFrame:

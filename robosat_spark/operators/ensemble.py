@@ -17,11 +17,11 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .rasterize import MASK_SCHEMA, unquantize_probs
+from .rasterize import MASK_SCHEMA, decode_masks, encode_masks, unquantize_probs
 
 
 def soft_vote(prob_dfs: list[DataFrame], weights: list[float] | None = None) -> DataFrame:
@@ -43,20 +43,16 @@ def soft_vote(prob_dfs: list[DataFrame], weights: list[float] | None = None) -> 
     wts = np.asarray(weights, dtype=np.float64)
 
     def vote(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                stacks = []
-                for i in range(n):
-                    q = np.frombuffer(r[f"data_{i}"], dtype=np.uint8).reshape(r["h"], r["w"])
-                    stacks.append(unquantize_probs(q))  # (2, h, w)
+        for batch in batches:
+            masks = []
+            for models in zip(*(decode_masks(batch, f"data_{i}") for i in range(n))):
+                z, x, y, _ = models[0]
+                stacks = [unquantize_probs(q) for *_, q in models]  # (2, h, w) each
                 avg = np.average(np.stack(stacks), axis=0, weights=wts)
-                mask = np.argmax(avg, axis=0).astype(np.uint8)
-                rows.append((r["z"], r["x"], r["y"], r["w"], r["h"], mask.tobytes()))
-            if rows:
-                yield pd.DataFrame(rows, columns=["z", "x", "y", "w", "h", "data"])
+                masks.append((z, x, y, np.argmax(avg, axis=0)))
+            yield encode_masks(masks)
 
-    return joined.mapInPandas(vote, MASK_SCHEMA)
+    return joined.mapInArrow(vote, MASK_SCHEMA)
 
 
 def compare_composites(
@@ -88,42 +84,25 @@ def compare_composites(
     n = len(mask_sets)
 
     def gen(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                w, h = int(r.w), int(r.h)
+        for batch in batches:
+            sets = [decode_masks(batch, f"d{i}", f"w{i}", f"h{i}") for i in range(1, n + 1)]
+            out = []
+            for (z, x, y, label), *masks in zip(decode_masks(batch, "d0"), *sets):
+                grids = [g for *_, g in masks]
                 # the reference asserts image.size == mask.size per tile
                 # (compare.py:34,41); a transposed mask has the same byte
-                # count and would reshape into a silently garbled strip
-                for i in range(1, n + 1):
-                    mw, mh = int(getattr(r, f"w{i}")), int(getattr(r, f"h{i}"))
-                    if (mw, mh) != (w, h):
+                # count and would be a silently garbled strip
+                for i, g in enumerate(grids):
+                    if g.shape != label.shape:
                         raise ValueError(
-                            f"mask set {i - 1} tile z={r.z}/{r.x}/{r.y} is "
-                            f"{mw}x{mh}, label is {w}x{h}"
+                            f"mask set {i} tile z={z}/{x}/{y} is {g.shape[1]}x{g.shape[0]}, "
+                            f"label is {label.shape[1]}x{label.shape[0]}"
                         )
-                grids = [
-                    np.frombuffer(getattr(r, f"d{i}"), dtype=np.uint8).reshape(h, w)
-                    for i in range(n + 1)
-                ]
-                keep = False
-                for g in grids[1:]:
-                    share = np.count_nonzero(g) / float(w * h)
-                    if minimum <= share <= maximum:
-                        keep = True
-                        break
-                if not keep:
-                    continue
-                combined = np.hstack(grids)
-                rows.append(
-                    (int(r.z), int(r.x), int(r.y), w * (n + 1), h,
-                     combined.tobytes())
-                )
-            yield pd.DataFrame(
-                rows, columns=["z", "x", "y", "w", "h", "data"]
-            )
+                if any(minimum <= np.count_nonzero(g) / g.size <= maximum for g in grids):
+                    out.append((z, x, y, np.hstack([label, *grids])))
+            yield encode_masks(out)
 
-    return j.mapInPandas(gen, MASK_SCHEMA)
+    return j.mapInArrow(gen, MASK_SCHEMA)
 
 
 def confusion_counts(predicted: DataFrame, truth: DataFrame) -> DataFrame:
@@ -134,22 +113,24 @@ def confusion_counts(predicted: DataFrame, truth: DataFrame) -> DataFrame:
     tn = both zero, fn = actual 1 pred 0, fp = pred 1 actual 0, tp = both 1.
     """
     joined = predicted.select(
-        "z", "x", "y", F.col("data").alias("pred")
+        "z", "x", "y", "w", "h", F.col("data").alias("pred")
     ).join(truth.select("z", "x", "y", F.col("data").alias("actual")), ["z", "x", "y"])
 
     def count(batches):
-        for pdf in batches:
+        for batch in batches:
             tn = fn = fp = tp = 0
-            for _, r in pdf.iterrows():
-                p = np.frombuffer(r["pred"], dtype=np.uint8) > 0
-                a = np.frombuffer(r["actual"], dtype=np.uint8) > 0
+            # a tile's truth shares its prediction's (w, h)
+            for (*_, pg), (*_, ag) in zip(decode_masks(batch, "pred"), decode_masks(batch, "actual")):
+                p, a = pg > 0, ag > 0
                 tp += int(np.count_nonzero(p & a))
                 tn += int(np.count_nonzero(~p & ~a))
                 fp += int(np.count_nonzero(p & ~a))
                 fn += int(np.count_nonzero(~p & a))
-            yield pd.DataFrame({"tn": [tn], "fn": [fn], "fp": [fp], "tp": [tp]})
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([v], pa.int64()) for v in (tn, fn, fp, tp)], names=["tn", "fn", "fp", "tp"]
+            )
 
-    partial = joined.mapInPandas(count, "tn LONG, fn LONG, fp LONG, tp LONG")
+    partial = joined.mapInArrow(count, "tn LONG, fn LONG, fp LONG, tp LONG")
     return partial.agg(
         F.sum("tn").alias("tn"), F.sum("fn").alias("fn"),
         F.sum("fp").alias("fp"), F.sum("tp").alias("tp"),

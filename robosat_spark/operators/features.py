@@ -9,20 +9,23 @@ Per-tile chain, parity with the ParkingHandler
   y-flip (dy -> 1 - dy, /root/reference/robosat/features/core.py:37-62) ->
   close ring -> validity filter (F5).
 
-Spark shape: ``applyInPandas`` over tile groups — the mask grid is the
-vectorization unit; each group is one tile's (h, w) uint8 grid.
+Spark shape: ``groupBy(z, x, y).applyInArrow`` over tile groups — the
+mask grid is the vectorization unit; each group is one tile's (h, w) uint8
+grid, read through the mask codec (``rasterize.decode_masks``), and the
+polygons leave through the ring codec (``geometry.rings_to_arrow``).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels import geometry as G
 from ..kernels import mercator as M
 from ..kernels import raster as R
+from .rasterize import decode_masks
 
 FEATURE_OUT_SCHEMA = (
     "z INT, x LONG, y LONG, local_id INT, rings ARRAY<ARRAY<ARRAY<DOUBLE>>>, "
@@ -105,25 +108,25 @@ def extract_features(
 ) -> DataFrame:
     """masks(z,x,y,w,h,data) -> per-tile vector features DataFrame."""
 
-    def per_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for _, r in pdf.iterrows():
-            mask = np.frombuffer(r["data"], dtype=np.uint8).reshape(r["h"], r["w"])
-            polys = extract_tile_features(
-                mask, int(r["x"]), int(r["y"]), int(r["z"]),
-                denoise_px, grow_px, simplify_threshold,
-            )
-            for li, rings in enumerate(polys):
-                area = G.polygon_area_m2(rings[0])
-                rows.append(
-                    (int(r["z"]), int(r["x"]), int(r["y"]), li,
-                     [[list(p) for p in ring] for ring in rings], len(rings), area)
-                )
-        return pd.DataFrame(
-            rows, columns=["z", "x", "y", "local_id", "rings", "n_rings", "area_m2"]
-        )
+    def per_tile(key, table):
+        rows = [
+            (z, x, y, li, rings)
+            for z, x, y, mask in decode_masks(table)
+            for li, rings in enumerate(extract_tile_features(
+                mask, x, y, z, denoise_px, grow_px, simplify_threshold
+            ))
+        ]
+        return pa.table({
+            "z": pa.array([r[0] for r in rows], pa.int32()),
+            "x": pa.array([r[1] for r in rows], pa.int64()),
+            "y": pa.array([r[2] for r in rows], pa.int64()),
+            "local_id": pa.array([r[3] for r in rows], pa.int32()),
+            "rings": G.rings_to_arrow(r[4] for r in rows),
+            "n_rings": pa.array([len(r[4]) for r in rows], pa.int32()),
+            "area_m2": pa.array([G.polygon_area_m2(r[4][0]) for r in rows], pa.float64()),
+        })
 
-    return masks.groupBy("z", "x", "y").applyInPandas(per_tile, FEATURE_OUT_SCHEMA)
+    return masks.groupBy("z", "x", "y").applyInArrow(per_tile, FEATURE_OUT_SCHEMA)
 
 
 def to_feature_table(extracted: DataFrame) -> DataFrame:

@@ -70,8 +70,7 @@ def pagerank(
     if not (0 < d_num < d_den):
         raise ValueError("damping d_num/d_den must lie in (0, 1)")
 
-    spark = edges.sparkSession
-    conf_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    conf_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -90,74 +89,70 @@ def pagerank(
     # wall on scheduling ~1500 empty reduce tasks across 8 rounds than
     # on ranks (measured 8-core walls BEAT 32-core walls). Dense graphs
     # (E >> N) that need wider map stages can pass shuffle_partitions
-    # explicitly; the session conf stays the cap.
+    # explicitly; the session conf stays the cap. The rounds get n_part
+    # through their inputs: the node set (so every rank vector) is pinned
+    # by node and the edge side by src.
     n_part = int(shuffle_partitions or max(1, min(conf_part, -(-n // 4096))))
+    nodes = nodes.repartition(n_part, "node").localCheckpoint(eager=True)
 
-    # the loop materializes every round eagerly (checkpoints), so scoping
-    # the session's shuffle-partition conf to the loop pins each round's
-    # exchanges at n_part; restored before the lazy final round returns
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-    try:
-        outdeg = edges.groupBy("src").agg(F.count("*").alias("__deg"))
-        # pin the big side's partitioning ONCE: every round's join meets it
-        edges_deg = (
-            edges.join(outdeg, "src")
-            .repartition(n_part, "src")
-            .localCheckpoint(eager=True)
+    outdeg = edges.groupBy("src").agg(F.count("*").alias("__deg"))
+    # pin the big side's partitioning ONCE: every round's join meets it
+    edges_deg = (
+        edges.join(outdeg, "src")
+        .repartition(n_part, "src")
+        .localCheckpoint(eager=True)
+    )
+    # the dangling-node SET is fixed across iterations — materialize it
+    # once (N-row scale). Deriving it per round from `outdeg` would drag
+    # the ORIGINAL edge lineage into every round's plan, i.e. one full
+    # re-scan of the 100 TB edge list per iteration just to re-learn
+    # which nodes have no out-edges.
+    dang_nodes = nodes.join(
+        outdeg, nodes["node"] == outdeg["src"], "left_anti"
+    ).localCheckpoint(eager=True)
+
+    base = ((d_den - d_num) * SCALE // n) // d_den
+    ranks = nodes.withColumn("rank_ppb", F.lit(SCALE // n).cast("long"))
+
+    for it in range(num_iters):
+        r = ranks.withColumnRenamed("node", "src")
+        # per-dst incoming sum: int64, exact, order-independent
+        insum = (
+            edges_deg.join(r, "src")
+            .select(
+                F.col("dst").alias("node"),
+                F.expr("rank_ppb DIV __deg").alias("__c"),
+            )
+            .groupBy("node")
+            .agg(F.sum("__c").alias("__insum"))
         )
-        # the dangling-node SET is fixed across iterations — materialize it
-        # once (N-row scale). Deriving it per round from `outdeg` would drag
-        # the ORIGINAL edge lineage into every round's plan, i.e. one full
-        # re-scan of the 100 TB edge list per iteration just to re-learn
-        # which nodes have no out-edges.
-        dang_nodes = nodes.join(
-            outdeg, nodes["node"] == outdeg["src"], "left_anti"
-        ).localCheckpoint(eager=True)
-
-        base = ((d_den - d_num) * SCALE // n) // d_den
-        ranks = nodes.withColumn("rank_ppb", F.lit(SCALE // n).cast("long"))
-
-        for it in range(num_iters):
-            r = ranks.withColumnRenamed("node", "src")
-            # per-dst incoming sum: int64, exact, order-independent
-            insum = (
-                edges_deg.join(r, "src")
-                .select(
-                    F.col("dst").alias("node"),
-                    F.expr("rank_ppb DIV __deg").alias("__c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("__c").alias("__insum"))
+        # dangling mass = ranks of nodes with no out-edges (1-row, lazy;
+        # ranks x checkpointed N-row set — no big-side lineage)
+        dang = (
+            ranks.join(dang_nodes, "node", "left_semi")
+            .agg(F.coalesce(F.sum("rank_ppb"), F.lit(0)).alias("__dang"))
+            .withColumn("__j", _k(F.col("__dang")))
+        )
+        ranks = (
+            nodes.join(insum, "node", "left")
+            .withColumn("__j", _k(F.col("node")))
+            .join(F.broadcast(dang), "__j")
+            .select(
+                "node",
+                (
+                    F.lit(base)
+                    + F.expr(
+                        f"CAST({d_num} AS BIGINT) * (coalesce(__insum, CAST(0 AS BIGINT))"
+                        f" + __dang DIV {n}) DIV {d_den}"
+                    )
+                ).cast("long").alias("rank_ppb"),
             )
-            # dangling mass = ranks of nodes with no out-edges (1-row, lazy;
-            # ranks x checkpointed N-row set — no big-side lineage)
-            dang = (
-                ranks.join(dang_nodes, "node", "left_semi")
-                .agg(F.coalesce(F.sum("rank_ppb"), F.lit(0)).alias("__dang"))
-                .withColumn("__j", _k(F.col("__dang")))
-            )
-            ranks = (
-                nodes.join(insum, "node", "left")
-                .withColumn("__j", _k(F.col("node")))
-                .join(F.broadcast(dang), "__j")
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.expr(
-                            f"CAST({d_num} AS BIGINT) * (coalesce(__insum, CAST(0 AS BIGINT))"
-                            f" + __dang DIV {n}) DIV {d_den}"
-                        )
-                    ).cast("long").alias("rank_ppb"),
-                )
-            )
-            if it < num_iters - 1:
-                # truncate lineage so round k+1 never replays rounds 1..k;
-                # the LAST round stays lazy (one-round lineage) — the caller
-                # composes/inspects the plan without forcing an extra job
-                ranks = ranks.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(conf_part))
+        )
+        if it < num_iters - 1:
+            # truncate lineage so round k+1 never replays rounds 1..k;
+            # the LAST round stays lazy (one-round lineage) — the caller
+            # composes/inspects the plan without forcing an extra job
+            ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
 

@@ -8,19 +8,21 @@ overlap border is cropped back off (datasets.py:123-136).
 
 Spark shape: the reference's per-tile random reads become one structured
 join — tiles x 9 offsets, equi-join on the shifted key (O(9T) hash join,
-not a theta join), then ``applyInPandas`` pastes the group into the halo
-canvas. The same buffer-replicate trick handles any cross-tile-boundary
-computation (feature merging, convolution) without a global shuffle.
+not a theta join), then ``groupBy(z, x, y).applyInArrow`` pastes the
+group into the halo canvas; grids enter and leave through the mask codec
+(``rasterize.decode_masks`` / ``encode_masks``). The same
+buffer-replicate trick handles any cross-tile-boundary computation
+(feature merging, convolution) without a global shuffle.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-HALO_SCHEMA = "z INT, x LONG, y LONG, w INT, h INT, data BINARY"
+from .rasterize import MASK_SCHEMA, decode_masks, encode_masks, map_masks
 
 
 def stitch_halo(spark: SparkSession, masks: DataFrame, overlap: int = 32) -> DataFrame:
@@ -42,16 +44,17 @@ def stitch_halo(spark: SparkSession, masks: DataFrame, overlap: int = 32) -> Dat
             "w", "h", "data",
         ),
         ["nx", "ny"],
-    ).filter(F.col("z") == F.col("z2")).select("z", "cx", "cy", "dx", "dy", "w", "h", "data")
+    ).filter(F.col("z") == F.col("z2")).select(
+        "z", F.col("cx").alias("x"), F.col("cy").alias("y"), "dx", "dy", "w", "h", "data"
+    )
 
-    def stitch(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        z, cx, cy = int(key[0]), int(key[1]), int(key[2])
-        w = int(pdf["w"].iloc[0])
-        h = int(pdf["h"].iloc[0])
+    def stitch(key, table):
+        z, cx, cy = (k.as_py() for k in key)
+        neighbors = decode_masks(table)  # (z, center x, center y, neighbor grid)
+        h, w = neighbors[0][3].shape
         canvas = np.zeros((h + 2 * overlap, w + 2 * overlap), dtype=np.uint8)
-        for _, r in pdf.iterrows():
-            grid = np.frombuffer(r["data"], dtype=np.uint8).reshape(r["h"], r["w"])
-            dx, dy = int(r["dx"]), int(r["dy"])
+        for (*_, grid), dx, dy in zip(neighbors, table.column("dx").to_pylist(),
+                                      table.column("dy").to_pylist()):
             # neighbor (dx,dy) occupies the block offset by (dx,dy) tiles
             # relative to the halo origin; clip to the canvas window
             x0 = overlap + dx * w
@@ -61,30 +64,13 @@ def stitch_halo(spark: SparkSession, masks: DataFrame, overlap: int = 32) -> Dat
             sy1 = min(h, canvas.shape[0] - y0)
             if sx1 > sx0 and sy1 > sy0:
                 canvas[y0 + sy0 : y0 + sy1, x0 + sx0 : x0 + sx1] = grid[sy0:sy1, sx0:sx1]
-        return pd.DataFrame(
-            {
-                "z": [np.int32(z)], "x": [cx], "y": [cy],
-                "w": [canvas.shape[1]], "h": [canvas.shape[0]],
-                "data": [canvas.tobytes()],
-            }
-        )
+        return pa.Table.from_batches([encode_masks([(z, cx, cy, canvas)])])
 
-    return joined.groupBy("z", "cx", "cy").applyInPandas(stitch, HALO_SCHEMA)
+    return joined.groupBy("z", "x", "y").applyInArrow(stitch, MASK_SCHEMA)
 
 
 def unbuffer(masks: DataFrame, overlap: int = 32) -> DataFrame:
     """Crop the halo border back off (G23, datasets.py:123-136)."""
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                grid = np.frombuffer(r["data"], dtype=np.uint8).reshape(r["h"], r["w"])
-                core = grid[overlap : r["h"] - overlap, overlap : r["w"] - overlap]
-                rows.append(
-                    (r["z"], r["x"], r["y"], core.shape[1], core.shape[0], core.tobytes())
-                )
-            if rows:
-                yield pd.DataFrame(rows, columns=["z", "x", "y", "w", "h", "data"])
-
-    return masks.mapInPandas(gen, HALO_SCHEMA)
+    return map_masks(masks, lambda z, x, y, grid: (
+        z, x, y, grid[overlap : grid.shape[0] - overlap, overlap : grid.shape[1] - overlap]
+    ))

@@ -12,8 +12,10 @@ the driver, so the feature side can itself be web-scale (the reference's
 in-memory R-tree + DFS is exactly the wall this removes,
 /root/reference/robosat/graph/core.py:14-15):
 
-  1. buffered rings computed per-feature in an Arrow pass (mercator
-     projection + raster-domain offset, kernels.buffer);
+  1. buffered rings computed per-feature in a ``mapInArrow`` pass
+     (mercator projection + raster-domain offset, kernels.buffer); every
+     pass below reads and writes rings through the one Arrow ring codec
+     (``geometry.rings_from_arrow`` / ``rings_to_arrow``);
   2. the R-tree probe becomes a cell-grid equi SELF-JOIN: explode each
      buffered bbox into covering cells at ``cell_zoom``, hash-join on the
      cell key, ``src < dst`` halves the pairs;
@@ -21,7 +23,7 @@ in-memory R-tree + DFS is exactly the wall this removes,
      BOTH sides (data flows through joins, not a driver broadcast) and a
      segment-intersection kernel keeps true neighbors;
   4. components via iterative min-label propagation (operators.components);
-  5. per-component union: groupBy(component) gathers member rings
+  5. per-component union: groupBy(component).applyInArrow gathers member rings
      group-locally, rasterizes onto a shared grid, erodes back by the
      buffer distance (merge.py:63-65 unbuffer), traces contours, simplifies,
      orients CCW, computes int Mollweide m² (merge.py:68-81 parity).
@@ -33,10 +35,8 @@ threshold and is covered by fixture margins.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,12 +47,6 @@ from .components import connected_components
 
 MERGED_SCHEMA = "component LONG, rings ARRAY<ARRAY<ARRAY<DOUBLE>>>, area_m2 DOUBLE, n_members INT"
 _BUFFERED_SCHEMA = "feature_id LONG, brings ARRAY<ARRAY<ARRAY<DOUBLE>>>"
-
-
-def _ring_np(ring) -> np.ndarray:
-    """Arrow nested arrays arrive as object arrays of point arrays — stack
-    into an (n, 2) float ndarray."""
-    return np.vstack([np.asarray(p, dtype=np.float64) for p in ring])
 
 
 def _to_mercator_ring(ring: np.ndarray) -> np.ndarray:
@@ -73,19 +67,17 @@ def buffered_rings(features: DataFrame, threshold_m: float) -> DataFrame:
     polygon dissolves holes smaller than the threshold anyway; fixture
     polygons for merge are hole-free)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fids, brs = [], []
-            for fid, rings in zip(pdf["feature_id"], pdf["rings"]):
-                ext = G.as_ring(rings[0])
-                merc = _to_mercator_ring(ext)
-                out = buffer_ring(merc, threshold_m, resolution=256)
-                fids.append(fid)
-                brs.append([[list(map(float, p)) for p in r] for r in out])
-            if fids:
-                yield pd.DataFrame({"feature_id": fids, "brings": brs})
+    def gen(batches):
+        for batch in batches:
+            brings = [
+                buffer_ring(_to_mercator_ring(rings[0]), threshold_m, resolution=256)
+                for rings in G.rings_from_arrow(batch.column("rings"))
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("feature_id"), G.rings_to_arrow(brings)], names=["feature_id", "brings"]
+            )
 
-    return features.select("feature_id", "rings").mapInPandas(gen, _BUFFERED_SCHEMA)
+    return features.select("feature_id", "rings").mapInArrow(gen, _BUFFERED_SCHEMA)
 
 
 def _bbox_cells_df(buffered: DataFrame, cell_zoom: int) -> DataFrame:
@@ -93,23 +85,24 @@ def _bbox_cells_df(buffered: DataFrame, cell_zoom: int) -> DataFrame:
     buffered bbox at ``cell_zoom`` (the spatial-index key)."""
     n = 1 << cell_zoom
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fids, cxs, cys = [], [], []
-            for fid, brings in zip(pdf["feature_id"], pdf["brings"]):
+    def gen(batches):
+        for batch in batches:
+            cells = [np.zeros((0, 3), np.int64)]
+            for fid, brings in zip(batch.column("feature_id").to_pylist(),
+                                   G.rings_from_arrow(batch.column("brings"))):
                 for ring in brings:
-                    ll = _to_lonlat_ring(_ring_np(ring))
+                    ll = _to_lonlat_ring(ring)
                     x0, y0 = M.lonlat_to_tile(ll[:, 0].min(), ll[:, 1].max(), cell_zoom)
                     x1, y1 = M.lonlat_to_tile(ll[:, 0].max(), ll[:, 1].min(), cell_zoom)
-                    for cx in range(int(x0), min(int(x1), n - 1) + 1):
-                        for cy in range(int(y0), min(int(y1), n - 1) + 1):
-                            fids.append(fid)
-                            cxs.append(cx)
-                            cys.append(cy)
-            if fids:
-                yield pd.DataFrame({"feature_id": fids, "cx": cxs, "cy": cys})
+                    cx, cy = np.meshgrid(np.arange(int(x0), min(int(x1), n - 1) + 1),
+                                         np.arange(int(y0), min(int(y1), n - 1) + 1))
+                    cells.append(np.column_stack([np.full(cx.size, fid), cx.ravel(), cy.ravel()]))
+            cells = np.vstack(cells)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(cells[:, k], pa.int64()) for k in range(3)], names=["feature_id", "cx", "cy"]
+            )
 
-    return buffered.mapInPandas(gen, "feature_id LONG, cx LONG, cy LONG").distinct()
+    return buffered.mapInArrow(gen, "feature_id LONG, cx LONG, cy LONG").distinct()
 
 
 def adjacency_edges(
@@ -141,22 +134,62 @@ def adjacency_edges(
         br.select(F.col("feature_id").alias("dst"), F.col("brings").alias("br_dst")), "dst"
     )
 
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keep_src, keep_dst = [], []
-            for s, d, ra, rb in zip(pdf["src"], pdf["dst"], pdf["br_src"], pdf["br_dst"]):
-                hit = any(
-                    G.rings_intersect(_ring_np(x), _ring_np(y))
-                    for x in ra
-                    for y in rb
-                )
-                if hit:
-                    keep_src.append(s)
-                    keep_dst.append(d)
-            if keep_src:
-                yield pd.DataFrame({"src": keep_src, "dst": keep_dst})
+    def refine(batches):
+        for batch in batches:
+            hit = [
+                any(G.rings_intersect(x, y) for x in ra for y in rb)
+                for ra, rb in zip(G.rings_from_arrow(batch.column("br_src")),
+                                  G.rings_from_arrow(batch.column("br_dst")))
+            ]
+            yield batch.select(["src", "dst"]).filter(pa.array(hit, pa.bool_()))
 
-    return pairs.mapInPandas(refine, "src LONG, dst LONG")
+    return pairs.mapInArrow(refine, "src LONG, dst LONG")
+
+
+def _union_polygons(rings: list, threshold_m: float, union_resolution: int) -> list:
+    """One component's buffered mercator rings -> its merged lon/lat
+    polygons (lists of closed rings, exterior CCW first): shared-grid OR,
+    erode back by the buffer distance, trace, simplify, orient."""
+    from ..kernels.raster import erode, find_contours, rasterize_rings
+
+    if not rings:
+        return []
+    allpts = np.vstack(rings)
+    pad = threshold_m * 2.0
+    minx, miny = allpts.min(axis=0) - pad
+    maxx, maxy = allpts.max(axis=0) + pad
+    span = max(maxx - minx, maxy - miny, 1e-9)
+    cell = span / union_resolution
+    w = max(int(np.ceil((maxx - minx) / cell)), 4)
+    h = max(int(np.ceil((maxy - miny) / cell)), 4)
+
+    def tf(xx, yy):
+        return (xx - minx) / cell, (maxy - yy) / cell
+
+    grid = np.zeros((h, w), dtype=np.uint8)
+    for ring in rings:
+        np.maximum(grid, rasterize_rings([ring], w, h, tf), out=grid)
+    # shrink back by the buffer distance (merge.py:63-65 unbuffer)
+    k = int(round(threshold_m / cell)) * 2 + 1
+    if k > 1:
+        grid = erode(grid, k)
+    contours, hierarchy = find_contours(grid)
+    polys: dict[int, list] = {}
+    for i, (c, meta) in enumerate(zip(contours, hierarchy)):
+        if len(c) < 3:
+            continue
+        wx = minx + (c[:, 0].astype(np.float64) + 0.5) * cell
+        wy = maxy - (c[:, 1].astype(np.float64) + 0.5) * cell
+        ring_m = G.simplify_dp(np.column_stack([wx, wy]), cell * 0.75, closed=True)
+        if len(ring_m) < 3:
+            continue
+        ll = G.orient(_to_lonlat_ring(ring_m), ccw=not meta["is_hole"])
+        parent = meta["parent"]
+        if not meta["is_hole"]:
+            polys.setdefault(i, []).insert(0, G.close_ring(ll))
+        elif parent in polys or parent >= 0:
+            polys.setdefault(parent, []).append(G.close_ring(ll))
+    return [rlist for rlist in polys.values() if rlist and G.signed_area(rlist[0]) > 0]
 
 
 def merge_features(
@@ -180,61 +213,14 @@ def merge_features(
         labels, br["feature_id"] == labels["node"]
     ).select("feature_id", "brings", "component")
 
-    def union_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        rings = []
-        for brings in pdf["brings"]:
-            for r in brings:
-                rings.append(_ring_np(r))
-        if not rings:
-            return pd.DataFrame(columns=["component", "rings", "area_m2", "n_members"])
-        allpts = np.vstack(rings)
-        pad = threshold_m * 2.0
-        minx, miny = allpts.min(axis=0) - pad
-        maxx, maxy = allpts.max(axis=0) + pad
-        span = max(maxx - minx, maxy - miny, 1e-9)
-        cell = span / union_resolution
-        w = max(int(np.ceil((maxx - minx) / cell)), 4)
-        h = max(int(np.ceil((maxy - miny) / cell)), 4)
+    def union_group(key, table):
+        rings = [r for brings in G.rings_from_arrow(table.column("brings")) for r in brings]
+        polys = _union_polygons(rings, threshold_m, union_resolution)
+        return pa.table({
+            "component": pa.array([key[0].as_py()] * len(polys), pa.int64()),
+            "rings": G.rings_to_arrow(polys),
+            "area_m2": pa.array([float(int(round(G.polygon_area_m2(p[0])))) for p in polys], pa.float64()),
+            "n_members": pa.array([table.num_rows] * len(polys), pa.int32()),
+        })
 
-        def tf(xx, yy):
-            return (xx - minx) / cell, (maxy - yy) / cell
-
-        from ..kernels.raster import erode, find_contours, rasterize_rings
-
-        grid = np.zeros((h, w), dtype=np.uint8)
-        for ring in rings:
-            np.maximum(grid, rasterize_rings([ring], w, h, tf), out=grid)
-        # shrink back by the buffer distance (merge.py:63-65 unbuffer)
-        k = int(round(threshold_m / cell)) * 2 + 1
-        if k > 1:
-            grid = erode(grid, k)
-        contours, hierarchy = find_contours(grid)
-        out = []
-        polys: dict[int, list] = {}
-        for i, (c, meta) in enumerate(zip(contours, hierarchy)):
-            if len(c) < 3:
-                continue
-            wx = minx + (c[:, 0].astype(np.float64) + 0.5) * cell
-            wy = maxy - (c[:, 1].astype(np.float64) + 0.5) * cell
-            ring_m = np.column_stack([wx, wy])
-            ring_m = G.simplify_dp(ring_m, cell * 0.75, closed=True)
-            if len(ring_m) < 3:
-                continue
-            ll = _to_lonlat_ring(ring_m)
-            ll = G.orient(ll, ccw=not meta["is_hole"])
-            parent = meta["parent"]
-            if not meta["is_hole"]:
-                polys.setdefault(i, []).insert(0, G.close_ring(ll))
-            elif parent in polys or parent >= 0:
-                polys.setdefault(parent, []).append(G.close_ring(ll))
-        for i, rlist in polys.items():
-            if not rlist or G.signed_area(rlist[0]) <= 0:
-                continue
-            area = G.polygon_area_m2(rlist[0])
-            out.append(
-                (int(key[0]), [[list(p) for p in ring] for ring in rlist],
-                 float(int(round(area))), len(pdf))
-            )
-        return pd.DataFrame(out, columns=["component", "rings", "area_m2", "n_members"])
-
-    return members.groupBy("component").applyInPandas(union_group, MERGED_SCHEMA)
+    return members.groupBy("component").applyInArrow(union_group, MERGED_SCHEMA)

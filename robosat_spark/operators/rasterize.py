@@ -6,11 +6,15 @@ a size x size uint8 grid (zero grid when no features), with max-merge on
 rerun collisions (:131-133).
 
 Spark shape (J2 + G18 + A6): tiles LEFT OUTER JOIN cover(features) on the
-tile key -> groupBy(z, x, y).applyInPandas(burn). The left-outer null group
+tile key -> groupBy(x, y).applyInArrow(burn). The left-outer null group
 produces the zero mask; burning every covering feature onto one canvas in
-the group is the max-merge. Ring coordinates ride a broadcast (the feature
-table is the small side), so the shuffle moves only (tile, feature_id)
-pairs.
+the group is the max-merge. Ring payloads join onto the (tile, feature)
+cover rows and reach Python as Arrow lists (``rings_from_arrow``).
+
+This module owns the mask grid row ``MASK_SCHEMA`` and its one Arrow
+codec: ``decode_masks`` reads a batch into (z, x, y, grid) views and
+``encode_masks`` writes grids back into a batch. Every mask operator
+(predict, halo, ensemble, weights, sinks, serve) goes through the pair.
 
 The deterministic "predict" substitute (P1, SURVEY.md §2.4) is
 ``synthesize_probs``: exact burns plus seeded salt-and-pepper noise and
@@ -20,18 +24,63 @@ without torch.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..kernels.geometry import as_ring
+from ..kernels.geometry import rings_from_arrow
 from ..kernels.mercator import lonlat_to_mercator, tile_xy_bounds
 from ..kernels.raster import rasterize_rings
 
 MASK_SCHEMA = "z INT, x LONG, y LONG, w INT, h INT, data BINARY"
+_MASK_ARROW_SCHEMA = pa.schema([
+    ("z", pa.int32()), ("x", pa.int64()), ("y", pa.int64()),
+    ("w", pa.int32()), ("h", pa.int32()), ("data", pa.binary()),
+])
+
+
+def _column(batch, name: str) -> pa.Array:
+    col = batch.column(name)
+    return col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+
+
+def decode_masks(batch, data: str = "data", w: str = "w", h: str = "h") -> list:
+    """Arrow record batch or table of mask rows -> [(z, x, y, grid)], each
+    grid a read-only (h, w) uint8 view of the ``data`` buffer (no copy:
+    the binary column's buffers are re-read as ``list<uint8>``). Joined
+    frames carrying several grids per row name the columns to decode."""
+    payload = _column(batch, data)
+    validity, offsets, values = payload.buffers()
+    list_type = pa.large_list if pa.types.is_large_binary(payload.type) else pa.list_
+    raw = pa.Array.from_buffers(pa.uint8(), values.size if values else 0, [None, values])
+    grids = pa.Array.from_buffers(list_type(pa.uint8()), len(payload), [validity, offsets],
+                                  offset=payload.offset, children=[raw])
+    off, raw = grids.offsets.to_numpy(), grids.values.to_numpy()
+    z, x, y, ws, hs = (_column(batch, c).to_pylist() for c in ("z", "x", "y", w, h))
+    return [(z[i], x[i], y[i], raw[off[i] : off[i + 1]].reshape(hs[i], ws[i]))
+            for i in range(len(payload))]
+
+
+def encode_masks(masks) -> pa.RecordBatch:
+    """[(z, x, y, grid)] -> one ``MASK_SCHEMA`` record batch; w and h come
+    from each grid's shape, data is its row-major uint8 bytes."""
+    z, x, y, grids = zip(*masks) if masks else ((), (), (), ())
+    grids = [np.asarray(g, dtype=np.uint8) for g in grids]
+    cols = (z, x, y, [g.shape[1] for g in grids], [g.shape[0] for g in grids],
+            [g.tobytes() for g in grids])
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, _MASK_ARROW_SCHEMA)], schema=_MASK_ARROW_SCHEMA
+    )
+
+
+def map_masks(masks: DataFrame, fn) -> DataFrame:
+    """Per-tile grid transform in one Arrow pass: every mask row goes
+    through ``fn(z, x, y, grid) -> (z, x, y, grid)`` via ``mapInArrow``."""
+    return masks.mapInArrow(
+        lambda batches: (encode_masks([fn(*m) for m in decode_masks(b)]) for b in batches),
+        MASK_SCHEMA,
+    )
 
 
 def tile_transform(x: int, y: int, z: int, size: int):
@@ -68,32 +117,18 @@ def rasterize_masks(
     tiles_norm = tiles_df.select(
         F.col("x").cast("long").alias("x"), F.col("y").cast("long").alias("y")
     ).distinct()
-    # ship rings as JSON text through the grouped exchange: pyarrow's
-    # grouped arrow_to_pandas segfaults on (nullable) deeply-nested list
-    # columns in this environment, and per-tile ring counts are tiny so
-    # the parse cost is noise
-    joined = tiles_norm.join(cov, ["x", "y"], "left_outer").select(
-        "x", "y", "feature_id", F.to_json(F.col("rings")).alias("rings_json")
-    )
+    joined = tiles_norm.join(cov, ["x", "y"], "left_outer").select("x", "y", "rings")
 
-    def burn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        import json
-
-        x, y = int(key[0]), int(key[1])
+    def burn(key, table):
+        x, y = key[0].as_py(), key[1].as_py()
         t = tile_transform(x, y, zoom, size)
         canvas = np.zeros((size, size), dtype=np.uint8)
-        for fid, rj in zip(pdf["feature_id"], pdf["rings_json"]):
-            if fid is None or (isinstance(fid, float) and np.isnan(fid)) or rj is None:
-                continue
-            np_rings = [as_ring(r) for r in json.loads(rj)]
-            burned = rasterize_rings(np_rings, size, size, t)
-            np.maximum(canvas, burned, out=canvas)  # A6 max-merge
-        return pd.DataFrame(
-            {"z": [np.int32(zoom)], "x": [x], "y": [y], "w": [size], "h": [size],
-             "data": [canvas.tobytes()]}
-        )
+        for rings in rings_from_arrow(table.column("rings")):
+            if rings is not None:  # the uncovered tile's null row
+                np.maximum(canvas, rasterize_rings(rings, size, size, t), out=canvas)  # A6
+        return pa.Table.from_batches([encode_masks([(zoom, x, y, canvas)])])
 
-    return joined.groupBy("x", "y").applyInPandas(burn, MASK_SCHEMA)
+    return joined.groupBy("x", "y").applyInArrow(burn, MASK_SCHEMA)
 
 
 def quantize_probs(prob: np.ndarray) -> np.ndarray:
@@ -115,54 +150,33 @@ def synthesize_probs(masks: DataFrame, noise: float = 0.02) -> DataFrame:
     """Deterministic predict substitute: mask burn -> fg prob 0.9/0.1 with
     seeded salt-and-pepper noise -> quantized uint8 (P1)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                grid = np.frombuffer(row["data"], dtype=np.uint8).reshape(row["h"], row["w"])
-                rng = np.random.RandomState((row["x"] * 73856093 ^ row["y"] * 19349663) % (2**31))
-                prob = np.where(grid > 0, 0.9, 0.1)
-                flip = rng.rand(*grid.shape) < noise
-                prob = np.where(flip, 1.0 - prob, prob)
-                out.append((row["z"], row["x"], row["y"], row["w"], row["h"],
-                            quantize_probs(prob).tobytes()))
-            if out:
-                yield pd.DataFrame(out, columns=["z", "x", "y", "w", "h", "data"])
+    def predict(z, x, y, grid):
+        rng = np.random.RandomState((x * 73856093 ^ y * 19349663) % (2**31))
+        prob = np.where(grid > 0, 0.9, 0.1)
+        flip = rng.rand(*grid.shape) < noise
+        return z, x, y, quantize_probs(np.where(flip, 1.0 - prob, prob))
 
-    return masks.mapInPandas(gen, MASK_SCHEMA)
+    return map_masks(masks, predict)
 
 
 def probs_to_masks(probs: DataFrame, weights=(1.0, 1.0)) -> DataFrame:
     """Ensemble soft-vote argmax (G21/P2): unquantize -> weighted average ->
     argmax. Single-model case reduces to fg > 0.5."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                q = np.frombuffer(row["data"], dtype=np.uint8).reshape(row["h"], row["w"])
-                stacked = unquantize_probs(q)
-                mask = np.argmax(np.average(stacked[None, ...], axis=0, weights=[1.0]), axis=0)
-                out.append((row["z"], row["x"], row["y"], row["w"], row["h"],
-                            mask.astype(np.uint8).tobytes()))
-            if out:
-                yield pd.DataFrame(out, columns=["z", "x", "y", "w", "h", "data"])
-
-    return probs.mapInPandas(gen, MASK_SCHEMA)
+    return map_masks(probs, lambda z, x, y, q: (z, x, y, np.argmax(unquantize_probs(q), axis=0)))
 
 
 def mask_nonzero_pct(masks: DataFrame) -> DataFrame:
     """F9 helper: percent of non-zero pixels per tile (compare tool's
     masks_percentage, /root/reference/robosat/tools/compare.py:44-49)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                grid = np.frombuffer(row["data"], dtype=np.uint8)
-                rows.append((row["z"], row["x"], row["y"],
-                             float(np.count_nonzero(grid)) / grid.size * 100.0))
-            if rows:
-                yield pd.DataFrame(rows, columns=["z", "x", "y", "pct"])
+    def gen(batches):
+        for batch in batches:
+            pct = [np.count_nonzero(g) / g.size * 100.0 for *_, g in decode_masks(batch)]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c).cast(_MASK_ARROW_SCHEMA.field(c).type) for c in ("z", "x", "y")]
+                + [pa.array(pct, pa.float64())],
+                names=["z", "x", "y", "pct"],
+            )
 
-    return masks.mapInPandas(gen, "z INT, x LONG, y LONG, pct DOUBLE")
+    return masks.mapInArrow(gen, "z INT, x LONG, y LONG, pct DOUBLE")

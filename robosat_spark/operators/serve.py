@@ -13,15 +13,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _tile(grids: DataFrame, z: int, x: int, y: int) -> DataFrame:
+    return grids.filter((F.col("z") == z) & (F.col("x") == x) & (F.col("y") == y)).limit(1)
+
+
 def lookup_tile(grids: DataFrame, z: int, x: int, y: int):
     """-> the (w, h, data) row for one tile, or None. Partition-pruned on
     z/x when the dataset is written with the slippy layout."""
-    rows = (
-        grids.filter((F.col("z") == z) & (F.col("x") == x) & (F.col("y") == y))
-        .select("w", "h", "data")
-        .limit(1)
-        .collect()
-    )
+    rows = _tile(grids, z, x, y).select("w", "h", "data").collect()
     return rows[0] if rows else None
 
 
@@ -30,16 +29,13 @@ def serve_tile_png(
 ) -> bytes | None:
     """The full `rs serve` response analog: partition-pruned lookup ->
     palette PNG bytes (serve.py:50-69 returns send_file(png); here the
-    bytes come from the from-scratch kernels.png encoder)."""
-    import numpy as np
-
+    bytes come from the from-scratch kernels.png encoder). The tile comes
+    back as Arrow and is read by the mask codec."""
     from ..kernels.png import encode_png
+    from .rasterize import decode_masks
 
-    row = lookup_tile(grids, z, x, y)
-    if row is None:
-        return None
-    grid = np.frombuffer(row["data"], dtype=np.uint8).reshape(row["h"], row["w"])
-    return encode_png(grid, palette=palette)
+    tile = decode_masks(_tile(grids, z, x, y).select("z", "x", "y", "w", "h", "data").toArrow())
+    return encode_png(tile[0][3], palette=palette) if tile else None
 
 
 def preview_page(tile_url: str = "/{z}/{x}/{y}.png", center=(0.0, 0.0), zoom: int = 12) -> str:

@@ -11,25 +11,28 @@ final, JVM hash agg), weight formula as a column expression.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .rasterize import decode_masks
 
 
 def class_histogram(masks: DataFrame, num_classes: int = 2) -> DataFrame:
     """-> (class INT, n LONG): global pixel counts per class index."""
 
     def gen(batches):
-        for pdf in batches:
+        for batch in batches:
             agg = np.zeros(num_classes, dtype=np.int64)
-            for _, r in pdf.iterrows():
-                grid = np.frombuffer(r["data"], dtype=np.uint8)
+            for *_, grid in decode_masks(batch):
                 agg += np.bincount(
-                    np.clip(grid, 0, num_classes - 1), minlength=num_classes
+                    np.clip(grid.ravel(), 0, num_classes - 1), minlength=num_classes
                 )
-            yield pd.DataFrame({"counts": [agg.tolist()]})
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([agg.tolist()], pa.list_(pa.int64()))], names=["counts"]
+            )
 
-    partial = masks.mapInPandas(gen, "counts ARRAY<LONG>")
+    partial = masks.mapInArrow(gen, "counts ARRAY<LONG>")
     return (
         partial.select(F.posexplode("counts").alias("class", "n"))
         .groupBy("class")

@@ -7,7 +7,7 @@ extraction handlers {"parking","building","road"}
 generalizes this to one registry of named operators in three shapes:
 
 - ``scalar``: Column-expression functions (UDF-like; JVM codegen)
-- ``grouped``: per-tile/per-component applyInPandas operators (UDAF-like)
+- ``grouped``: per-tile/per-component applyInArrow operators (UDAF-like)
 - ``expand``: cover/contour-style operators whose output fans out (UDTF-like)
 
 ``register`` is the user extension point; the built-ins below make every

@@ -214,18 +214,19 @@ def grids_from_slippy_pngs(spark: SparkSession, root: str) -> DataFrame:
     from-scratch codec (kernels.png) in Arrow batches. Palette images
     yield the class-index bytes — exactly what rasterize_masks produced,
     so write->scan->decode is an identity on mask datasets
-    (tests/test_png.py)."""
-    import pandas as pd
+    (tests/test_png.py); the grids leave through the mask codec
+    (``rasterize.encode_masks``), so the table has ``MASK_SCHEMA``."""
+    from ..operators.rasterize import MASK_SCHEMA, encode_masks
 
     tiles = tiles_from_slippy_map(spark, root, with_content=True)
 
     def gen(batches):
         from ..kernels.png import decode_png
 
-        for pdf in batches:
-            rows = []
-            for z, x, y, content in zip(pdf["z"], pdf["x"], pdf["y"], pdf["content"]):
-                img, _pal = decode_png(bytes(content))
+        for batch in batches:
+            masks = []
+            for z, x, y, content in zip(*(batch.column(c).to_pylist() for c in ("z", "x", "y", "content"))):
+                img, _pal = decode_png(content)
                 if img.ndim != 2:
                     # the grids schema is single-channel (1 byte/pixel);
                     # silently packing RGB(A) bytes would corrupt every
@@ -235,14 +236,10 @@ def grids_from_slippy_pngs(spark: SparkSession, root: str) -> DataFrame:
                         f"{img.shape[2]} channels — grids tables are "
                         "single-channel masks"
                     )
-                h, w = img.shape
-                rows.append((int(z), int(x), int(y), w, h, img.tobytes()))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["z", "x", "y", "w", "h", "data"]
-                )
+                masks.append((z, x, y, img))
+            yield encode_masks(masks)
 
-    return tiles.mapInPandas(gen, "z INT, x INT, y INT, w INT, h INT, data BINARY")
+    return tiles.mapInArrow(gen, MASK_SCHEMA)
 
 
 def features_from_geojson(spark: SparkSession, path: str) -> DataFrame:

@@ -70,8 +70,9 @@ def write_slippy_pngs(masks: DataFrame, root: str, palette: list[int] | None = N
     """K4 (reference-parity layout): z/x/y.png files, palette-indexed like
     the reference's mask writer (/root/reference/robosat/tools/rasterize.py:126-140
     — PIL P-mode with a class palette). Encoding is the from-scratch stdlib
-    zlib codec (kernels.png) inside ``foreachPartition`` — one task writes
-    its own tiles, no driver collection. ``root`` must be a path visible to
+    zlib codec (kernels.png) inside a ``mapInArrow`` pass that reads grids
+    through the mask codec — one task writes its own tiles, no driver
+    collection. ``root`` must be a path visible to
     executors (local/NFS/fuse mount). Overwrite semantics like the other
     sinks, but STAGED like the parquet writers: the job writes into a
     fresh staging directory and the swap to ``root`` happens only after
@@ -83,26 +84,28 @@ def write_slippy_pngs(masks: DataFrame, root: str, palette: list[int] | None = N
     import shutil
     import uuid
 
-    import numpy as np
+    import pyarrow as pa
 
     staging = f"{root.rstrip(os.sep)}.staging-{uuid.uuid4().hex[:12]}"
     cols = masks.select("z", "x", "y", "w", "h", "data")
 
-    def sink(rows):
+    def sink(batches):
         from ..kernels.png import encode_png
+        from ..operators.rasterize import decode_masks
 
-        for r in rows:
-            grid = np.frombuffer(r["data"], dtype=np.uint8).reshape(r["h"], r["w"])
-            d = os.path.join(staging, str(r["z"]), str(r["x"]))
-            os.makedirs(d, exist_ok=True)
-            final = os.path.join(d, f"{r['y']}.png")
-            tmp = final + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-            with open(tmp, "wb") as f:
-                f.write(encode_png(grid, palette=palette))
-            os.replace(tmp, final)
+        for batch in batches:
+            for z, x, y, grid in decode_masks(batch):
+                d = os.path.join(staging, str(z), str(x))
+                os.makedirs(d, exist_ok=True)
+                final = os.path.join(d, f"{y}.png")
+                tmp = final + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
+                with open(tmp, "wb") as f:
+                    f.write(encode_png(grid, palette=palette))
+                os.replace(tmp, final)
+            yield pa.RecordBatch.from_arrays([pa.array([batch.num_rows], pa.int64())], names=["n"])
 
     try:
-        cols.foreachPartition(sink)
+        cols.mapInArrow(sink, "n LONG").collect()
     except Exception:
         shutil.rmtree(staging, ignore_errors=True)
         raise

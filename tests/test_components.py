@@ -39,3 +39,30 @@ def test_components_two_chains_and_ring(spark):
         for r in component_sizes(connected_components(df, max_iter=12)).collect()
     }
     assert sizes == {100: 41, 200: 61, 300: 50}
+
+
+def test_graph_operators_leave_session_conf_alone(spark, monkeypatch):
+    """connected_components and pagerank size their rounds per plan
+    (repartition), never through the session-global shuffle conf."""
+    import pathlib
+
+    from pyspark.sql.conf import RuntimeConfig
+
+    from robosat_spark.operators.graph import pagerank
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    writes = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        writes.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6), (7, 7)], "src LONG, dst LONG")
+    assert connected_components(edges).count() == 6
+    assert pagerank(edges, num_iters=3).count() == 6
+    assert writes == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    ops = pathlib.Path(__file__).resolve().parents[1] / "robosat_spark" / "operators"
+    assert [p.name for p in ops.glob("*.py") if "conf.set(" in p.read_text()] == []

@@ -1,18 +1,17 @@
 """Geometry kernel unit tests: PIP, area, DP simplify, intersects, IoU."""
 
-import json
-
 import numpy as np
 import pytest
 
 from robosat_spark.kernels import geometry as G
+from robosat_spark.sources.fixtures import PARKING_0, PARKING_1
 
 SQUARE = np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0]])
 
 
 def _parking_rings():
-    d = json.load(open("/root/reference/tests/fixtures/parking/features.geojson"))
-    return [np.asarray(f["geometry"]["coordinates"][0]) for f in d["features"]]
+    """The reference's two parking polygons, embedded in the fixtures."""
+    return [np.asarray(PARKING_0), np.asarray(PARKING_1)]
 
 
 def test_signed_area_and_orientation():

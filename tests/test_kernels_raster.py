@@ -1,18 +1,17 @@
 """Raster kernel tests: burn goldens, morphology, contours, cover."""
 
-import json
-
 import numpy as np
 import pytest
 
 from robosat_spark.kernels import geometry as G
 from robosat_spark.kernels import mercator as M
 from robosat_spark.kernels import raster as R
+from robosat_spark.sources.fixtures import PARKING_0, PARKING_1
 
 
 def _parking_rings():
-    d = json.load(open("/root/reference/tests/fixtures/parking/features.geojson"))
-    return [np.asarray(f["geometry"]["coordinates"][0]) for f in d["features"]]
+    """The reference's two parking polygons, embedded in the fixtures."""
+    return [np.asarray(PARKING_0), np.asarray(PARKING_1)]
 
 
 def _tile_transform(x, y, z, size):
@@ -90,6 +89,28 @@ def test_find_contours_hole_hierarchy():
     holes = [i for i, h in enumerate(hierarchy) if h["is_hole"]]
     assert len(outers) == 1 and len(holes) == 1
     assert hierarchy[holes[0]]["parent"] == outers[0]
+
+
+def test_find_contours_pointed_top_is_an_outer_border():
+    """A component whose first raster-order pixel has zeros on both sides
+    (a one-pixel apex) is an outer border, not a hole."""
+    diamond = np.zeros((12, 12), np.uint8)
+    for r in range(5):
+        diamond[2 + r, 5 - r : 6 + r] = 1
+        diamond[10 - r, 5 - r : 6 + r] = 1
+    _contours, hierarchy = R.find_contours(diamond)
+    assert hierarchy == [{"parent": -1, "is_hole": False}]
+
+
+def test_buffer_ring_keeps_a_pointed_concave_ring():
+    """The raster buffer traces its dilated grid; a ring whose grid starts
+    at a one-pixel apex must still come back as one outer ring."""
+    from robosat_spark.kernels.buffer import buffer_ring
+
+    arrow = np.array([[0.0, 0.0], [10.0, -4.0], [20.0, 0.0], [10.0, 12.0], [10.0, 30.0]])
+    out = buffer_ring(arrow, 1.0)
+    assert len(out) == 1 and G.is_ccw(out[0])
+    assert abs(G.signed_area(out[0])) > abs(G.signed_area(arrow))
 
 
 def test_find_contours_nested_island():
