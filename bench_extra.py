@@ -28,14 +28,13 @@ def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     flags = {a for a in sys.argv[1:] if a.startswith("--")}
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_trials = int(os.environ.get("SPARK_GRAFT_TRIALS", "3"))
 
     import bench as bench_mod
     import __spark_entry__ as entry
     from robosat_spark.session import get_spark
 
-    spark = get_spark(app="robosat_spark_bench_extra", cores=cpus)
+    spark = get_spark(app="robosat_spark_bench_extra")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.bench_queries()
     names = bench_mod.BENCH_QUERY_NAMES if "--all" in flags else args
@@ -84,7 +83,8 @@ def main():
         spark.sparkContext._jvm.System.gc()
     best = {n: min(ts) for n, ts in trials.items()}
     print(json.dumps({"queries": best, "trials": trials, "sf_dir": sf_dir,
-                      "cpus": cpus, "total_min_sum": round(sum(best.values()), 2)}))
+                      "cpus": spark.sparkContext.defaultParallelism,
+                      "total_min_sum": round(sum(best.values()), 2)}))
     spark.stop()
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import NEARDUP_LSH_SEEDS, cosine_sim, lsh_bucket
+from .dedup import _candidate_pairs, _refine_pairs
 
 
 def lsh_neardup_pairs(
@@ -33,8 +34,9 @@ def lsh_neardup_pairs(
 
     ``vectors``: (id LONG, v ARRAY<DOUBLE>). Each vector gets L bucket ids
     (one per plane table, pure column expressions); candidates are pairs
-    sharing ANY table's bucket — L equi self-joins unioned, never a
-    BroadcastNestedLoopJoin (asserted in tests). Exact cosine >= threshold
+    sharing ANY table's bucket — one (table, bucket)-keyed equi self-join
+    (``dedup._candidate_pairs``), never a BroadcastNestedLoopJoin
+    (asserted in tests). Exact cosine >= threshold
     refines candidates, so precision is 1.0; recall is the LSH collision
     probability (quantified against the exact baseline in
     tests/test_dedup_ann.py). Buckets are deterministic sin-derived planes
@@ -62,27 +64,8 @@ def lsh_neardup_pairs(
             )
         ).alias("tb"),
     ).select("id", F.col("tb.t").alias("t"), F.col("tb.bk").alias("bk"))
-    a = tb.select(F.col("id").alias("id_a"), "t", "bk")
-    b = tb.select(F.col("id").alias("id_b"), "t", "bk")
-    cand = (
-        a.join(b, ["t", "bk"]).filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-    )
-    cand = cand.distinct()
-    # wide exact refine (see dedup.jaccard_prefix_pairs: the per-pair
-    # cosine fold is compute-heavy/byte-light; AQE's byte-based
-    # coalescing would strand it on a handful of tasks)
-    n_ref = int(vectors.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    cand = cand.repartition(n_ref, "id_a", "id_b")
-    va = vectors.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
-    vb = vectors.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
-    out = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("sim", cosine_sim(F.col("v_a"), F.col("v_b")))
-    )
-    return out.filter(F.col("sim") >= F.lit(threshold)).select(
-        "id_a", "id_b", F.round("sim", 6).alias("sim")
-    )
+    cand = _candidate_pairs(tb, ["t", "bk"], "id_a", "id_b")
+    return _refine_pairs(cand, vectors, "id_a", "id_b", cosine_sim, "sim", threshold)
 
 
 def _argmax_centroid(scored: DataFrame) -> DataFrame:

@@ -112,6 +112,70 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(1.0))
 
 
+def _candidate_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    a: str,
+    b: str,
+    carry: tuple[str, ...] = (),
+    pair_filter: Column | None = None,
+) -> DataFrame:
+    """-> (a, b, c_a, c_b for c in carry): the distinct pairs of ``rows``
+    (id, *keys, *carry) with id_a < id_b that share every key column —
+    the candidate half of the four near-duplicate filter-refine joins
+    (``minhash_lsh_pairs``, ``jaccard_prefix_pairs``,
+    ``simhash_pairs_banded``, ``ann.lsh_neardup_pairs``). Per-side
+    columns arrive as ``<c>_a``/``<c>_b``; ``pair_filter`` may read them
+    to prune pairs before the distinct.
+
+    The one wide step: pairs are hash-repartitioned on (a, b) at the
+    session's shuffle width, THEN made distinct. The exact refine that
+    follows is compute-heavy and byte-light (tens of µs of
+    array_intersect or cosine fold per 16-byte pair), a cost AQE's
+    byte-based partition coalescing cannot see: left to it, the refine
+    runs on one or two tasks. A REPARTITION_BY_NUM exchange is exempt
+    from that coalescing. The order matters: a repartition placed AFTER
+    the distinct sits on an aggregate already hash-partitioned by (a, b)
+    at the same width, so EnsureRequirements removes it as redundant and
+    the refine reads the distinct's own ENSURE_REQUIREMENTS exchange,
+    which AQE coalesces (to 1 partition at sf0.1 on 4 cores). Placed
+    before, it is the only exchange on this edge and also satisfies the
+    distinct."""
+    def side(s: str, name: str) -> DataFrame:
+        return rows.select(
+            F.col("id").alias(name), *keys, *[F.col(c).alias(f"{c}_{s}") for c in carry]
+        )
+
+    cand = side("a", a).join(side("b", b), keys).filter(F.col(a) < F.col(b))
+    if pair_filter is not None:
+        cand = cand.filter(pair_filter)
+    n_wide = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        cand.select(a, b, *[f"{c}_{s}" for c in carry for s in "ab"])
+        .repartition(n_wide, a, b)
+        .distinct()
+    )
+
+
+def _refine_pairs(
+    cand: DataFrame, values: DataFrame, a: str, b: str, score, name: str, threshold: float
+) -> DataFrame:
+    """-> (a, b, name): the exact refine of ``_candidate_pairs`` output —
+    each side's value joined by id from ``values`` (id, v), scored by
+    ``score(v_a, v_b)``, kept at >= ``threshold`` and rounded to 6 places."""
+    def side(s: str, key: str) -> DataFrame:
+        return values.select(F.col("id").alias(key), F.col("v").alias(f"v_{s}"))
+
+    scored = (
+        cand.join(side("a", a), a)
+        .join(side("b", b), b)
+        .withColumn(name, score(F.col("v_a"), F.col("v_b")))
+    )
+    return scored.filter(F.col(name) >= F.lit(threshold)).select(
+        a, b, F.round(name, 6).alias(name)
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -170,26 +234,9 @@ def minhash_lsh_pairs(
     # 32-permutation md5 signature on BOTH build and probe branches
     bands = bands.localCheckpoint(eager=False)
 
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-        .distinct()
-    )
-    # wide exact refine (same rationale as jaccard_prefix_pairs: the
-    # per-pair array_intersect is compute-heavy/byte-light and AQE's
-    # byte-based coalescing would strand it on a handful of tasks)
-    n_ref = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    cand = cand.repartition(n_ref, "doc_a", "doc_b")
-
-    pairs = (
-        cand.join(sh.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a")), "doc_a")
-        .join(sh.select(F.col("id").alias("doc_b"), F.col("sh").alias("sh_b")), "doc_b")
-        .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard") >= F.lit(threshold))
-    )
-    return pairs.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    cand = _candidate_pairs(bands, ["band", "key"], "doc_a", "doc_b")
+    values = sh.select("id", F.col("sh").alias("v"))
+    return _refine_pairs(cand, values, "doc_a", "doc_b", jaccard, "jaccard", threshold)
 
 
 def jaccard_prefix_pairs(
@@ -233,8 +280,6 @@ def jaccard_prefix_pairs(
     tok = sh.select("id", F.size("sh").alias("s"), F.explode("sh").alias("token"))
     dfreq = tok.groupBy("token").agg(F.count("*").alias("df"))
     ranked = tok.join(dfreq, "token")
-    from pyspark.sql import Window
-
     w = Window.partitionBy("id").orderBy(F.col("df").asc(), F.col("token").asc())
     # same 1e-9 slack as the length filter below: ceil(t*s) must not round
     # an exactly-integer rational product UP (t*s representable a hair
@@ -247,38 +292,15 @@ def jaccard_prefix_pairs(
         .select("id", "s", "token")
     )
 
-    a = prefix.select(F.col("id").alias("doc_a"), F.col("s").alias("sa"), "token")
-    b = prefix.select(F.col("id").alias("doc_b"), F.col("s").alias("sb"), "token")
-    cand = (
-        a.join(b, "token")
-        .filter(
-            (F.col("doc_a") < F.col("doc_b"))
-            # 1e-9 slack: the filter is Spark-only pruning and must never
-            # drop a boundary pair (J >= t implies sb >= t*sa exactly in
-            # rationals; the IEEE product can round a hair above the int)
-            & (F.col("sb") >= F.lit(threshold) * F.col("sa") - F.lit(1e-9))
-            & (F.col("sa") >= F.lit(threshold) * F.col("sb") - F.lit(1e-9))
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
+    # 1e-9 slack: the length filter is Spark-only pruning and must never
+    # drop a boundary pair (J >= t implies s_b >= t*s_a exactly in
+    # rationals; the IEEE product can round a hair above the int)
+    length_ok = (F.col("s_b") >= F.lit(threshold) * F.col("s_a") - F.lit(1e-9)) & (
+        F.col("s_a") >= F.lit(threshold) * F.col("s_b") - F.lit(1e-9)
     )
-    # the exact refine below is compute-heavy but byte-light (~50 us of
-    # array_intersect per pair over a 16-byte row), exactly the shape
-    # AQE's byte-based partition coalescing under-parallelizes (measured:
-    # the refine ran as 5 tasks on 32 cores and dominated the wall) — a
-    # deterministic hash repartition at the session's shuffle width keeps
-    # the refine as wide as the cluster at any candidate volume (r7,
-    # guide §2.5: AQE cannot see per-row compute cost)
-    n_ref = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    cand = cand.repartition(n_ref, "doc_a", "doc_b")
-
-    pairs = (
-        cand.join(sh.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a")), "doc_a")
-        .join(sh.select(F.col("id").alias("doc_b"), F.col("sh").alias("sh_b")), "doc_b")
-        .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard") >= F.lit(threshold))
-    )
-    return pairs.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    cand = _candidate_pairs(prefix, ["token"], "doc_a", "doc_b", ("s",), length_ok)
+    values = sh.select("id", F.col("sh").alias("v"))
+    return _refine_pairs(cand, values, "doc_a", "doc_b", jaccard, "jaccard", threshold)
 
 
 def simhash(text: Column, bits: int = 32) -> Column:
@@ -387,18 +409,7 @@ def simhash_pairs_banded(
             )
         ).alias("cv"),
     ).select("id", "sh", F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val"))
-    a = chunks.select(
-        F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"), "chunk", "val"
-    )
-    b = chunks.select(
-        F.col("id").alias("doc_b"), F.col("sh").alias("sh_b"), "chunk", "val"
-    )
-    cand = (
-        a.join(b, ["chunk", "val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
-        .distinct()
-    )
+    cand = _candidate_pairs(chunks, ["chunk", "val"], "doc_a", "doc_b", ("sh",))
     return (
         cand.withColumn("hd", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
         .filter(F.col("hd") <= max_hd)

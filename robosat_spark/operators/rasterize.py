@@ -159,9 +159,10 @@ def synthesize_probs(masks: DataFrame, noise: float = 0.02) -> DataFrame:
     return map_masks(masks, predict)
 
 
-def probs_to_masks(probs: DataFrame, weights=(1.0, 1.0)) -> DataFrame:
-    """Ensemble soft-vote argmax (G21/P2): unquantize -> weighted average ->
-    argmax. Single-model case reduces to fg > 0.5."""
+def probs_to_masks(probs: DataFrame) -> DataFrame:
+    """Single-model mask from quantized probabilities (G21/P2): unquantize
+    -> argmax over (bg, fg), i.e. fg > 0.5. Multi-model soft voting lives
+    in ``operators.ensemble``."""
 
     return map_masks(probs, lambda z, x, y, q: (z, x, y, np.argmax(unquantize_probs(q), axis=0)))
 

@@ -23,7 +23,7 @@ def get_spark(app: str = "robosat_spark", cores: int | None = None, shuffle_part
             repo_root + (os.pathsep + existing if existing else "")
         )
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores * 2, 8)
     builder = (

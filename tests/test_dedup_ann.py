@@ -226,6 +226,69 @@ def test_lsh_neardup_pairs_planted_recall_no_bnlj(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
+def _final_plan_nodes(df) -> list[tuple[int, str, int | None]]:
+    """(indent, node text, parent index) for every node of ``df``'s final
+    AQE plan (call after an action), parsed from the tree string."""
+    text = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in text, text
+    final = text.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    nodes = []
+    for line in final.splitlines()[1:]:
+        body = line.lstrip(" :+-")
+        if not body:
+            continue
+        indent = len(line) - len(body)
+        parent = next((i for i in range(len(nodes) - 1, -1, -1) if nodes[i][0] < indent), None)
+        nodes.append((indent, body, parent))
+    return nodes
+
+
+@pytest.mark.parametrize("op", ["minhash", "prefix", "simhash", "lsh"])
+def test_pair_refine_reads_one_uncoalesced_wide_exchange(spark, docs, op):
+    """Every near-duplicate pair join feeds its refine from ONE exchange on
+    the (a, b) edge: ``hashpartitioning(a, b, <shuffle partitions>),
+    REPARTITION_BY_NUM``, read without an AQE coalesce, in the FINAL plan.
+    A repartition placed after the pair distinct is dropped by
+    EnsureRequirements, and AQE then coalesces the distinct's own exchange
+    to a single task (the plan minhash and lsh had before sharing the
+    candidate builder)."""
+    import re
+
+    import numpy as np
+
+    from robosat_spark.operators.ann import lsh_neardup_pairs
+    from robosat_spark.operators.dedup import jaccard_prefix_pairs, simhash_pairs_banded
+
+    if op == "lsh":
+        rng = np.random.RandomState(5)
+        base = rng.randn(20, 8)
+        rows = [(i, [float(x) for x in base[i]]) for i in range(20)]
+        rows += [(100 + i, [float(x) for x in base[i] + 0.05 * rng.randn(8)]) for i in range(20)]
+        out = lsh_neardup_pairs(spark.createDataFrame(rows, "id LONG, v ARRAY<DOUBLE>"), 0.9)
+        a, b = "id_a", "id_b"
+    else:
+        build = {
+            "minhash": lambda: minhash_lsh_pairs(docs, threshold=0.3),
+            "prefix": lambda: jaccard_prefix_pairs(docs, threshold=0.6),
+            "simhash": lambda: simhash_pairs_banded(docs, bits=32, max_hd=2),
+        }
+        out = build[op]()
+        a, b = "doc_a", "doc_b"
+    assert out.collect()
+
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    nodes = _final_plan_nodes(out)
+    assert not any("BroadcastNestedLoopJoin" in t for _, t, _ in nodes)
+    edge = re.compile(rf"Exchange hashpartitioning\({a}#\d+L?, {b}#\d+L?, (\d+)\), (\w+)")
+    on_edge = [i for i, (_, t, _) in enumerate(nodes) if edge.match(t)]
+    shapes = [edge.match(nodes[i][1]).groups() for i in on_edge]
+    assert shapes == [(n, "REPARTITION_BY_NUM")], [nodes[i][1] for i in on_edge]
+    stage = nodes[on_edge[0]][2]
+    assert nodes[stage][1].startswith("ShuffleQueryStage"), nodes[stage][1]
+    reader = nodes[nodes[stage][2]][1]
+    assert not reader.startswith("AQEShuffleRead"), reader
+
+
 def test_ivf_assign_centroids_self_assign(spark):
     rows = [(i, [float(i == j) for j in range(4)]) for i in range(4)]
     rows += [(4, [0.9, 0.1, 0.0, 0.0]), (5, [0.0, 0.1, 0.95, 0.0])]
