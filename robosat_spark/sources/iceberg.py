@@ -7,16 +7,20 @@ the table format itself is implemented from the public Iceberg Table Spec
 (``sources/avro_codec``). No JSON stand-ins: manifests and manifest lists
 are real Avro object-container files with spec field names and field-ids.
 
-Write path (``write_iceberg``): append a snapshot over parquet data files
-written by Spark —
+Write path (``write_iceberg``, ``compact_table``, ``delete_rows``,
+``delete_rows_equality``): Spark writes parquet files, then one commit
+(``_commit_snapshot``) publishes them as a snapshot —
   data files keep FULL rows (spec: partition columns are stored in the
-  file), written one directory per identity-partition value;
+  file), written one directory per partition value;
   per-file column stats (record count, null counts, lower/upper bounds)
   come from the parquet footers via pyarrow and are serialized with the
   spec's single-value binary encoding (Appendix D);
-  each snapshot gets one manifest (avro), a manifest list (avro) that
-  carries prior snapshots' manifests forward (append semantics), a new
-  ``vN.metadata.json``, and a ``version-hint.text`` bump.
+  each snapshot gets one manifest (avro) over the files it added and a
+  manifest list (avro). Appends and deletes carry the prior snapshot's
+  manifests forward; a compaction (replace) lists only its rewrite.
+  The new ``vN.metadata.json`` becomes current when ``version-hint.text``
+  is swapped in with one atomic rename (``expire_snapshots`` publishes
+  its metadata the same way).
 
 Read path (``IcebergTable``): snapshot resolution (current / by id /
 as-of timestamp), manifest pruning via partition field summaries,
@@ -264,8 +268,9 @@ def _iceberg_schema_from_spark(df) -> list[dict]:
 
 
 def _file_stats(path: str, ice_schema: list[dict], stats_cols: tuple[str, ...]):
-    """(record_count, size_bytes, null_counts, lower, upper) from the
-    parquet footer — maps keyed by Iceberg field id, bounds spec-encoded."""
+    """(record_count, {null_value_counts, lower_bounds, upper_bounds})
+    from the parquet footer — maps keyed by Iceberg field id, bounds
+    spec-encoded."""
     import pyarrow.parquet as pq
 
     by_name = {f["name"]: f for f in ice_schema}
@@ -293,13 +298,91 @@ def _file_stats(path: str, ice_schema: list[dict], stats_cols: tuple[str, ...]):
                 hi[fid] = mx if fid not in hi or mx > hi[fid] else hi[fid]
     types = {f["id"]: f["type"] for f in ice_schema}
     enc = lambda d: [{"key": k, "value": encode_bound(v, types[k])} for k, v in sorted(d.items())]
-    return (
-        md.num_rows,
-        os.path.getsize(path),
-        [{"key": k, "value": v} for k, v in sorted(nulls.items())],
-        enc(lo),
-        enc(hi),
+    return md.num_rows, {
+        "null_value_counts": [{"key": k, "value": v} for k, v in sorted(nulls.items())],
+        "lower_bounds": enc(lo),
+        "upper_bounds": enc(hi),
+    }
+
+
+def _new_table_meta(table_path: str, df) -> dict:
+    """Metadata of a table with no snapshot yet, schema 0 taken from
+    ``df``. Its key order is the one every later version keeps."""
+    fields = _iceberg_schema_from_spark(df)
+    return {
+        "format-version": FORMAT_VERSION,
+        "table-uuid": "00000000-0000-0000-0000-000000000000",
+        "location": table_path,
+        "last-sequence-number": 0,
+        "last-updated-ms": 0,
+        "last-column-id": len(fields),
+        "current-schema-id": 0,
+        "schemas": [{"type": "struct", "schema-id": 0, "fields": fields}],
+        "default-spec-id": 0,
+        "partition-specs": [],
+        "last-partition-id": PARTITION_FIELD_ID_START - 1,
+        "default-sort-order-id": 0,
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "properties": {},
+        "current-snapshot-id": -1,
+        "snapshots": [],
+        "snapshot-log": [],
+        "metadata-log": [],
+    }
+
+
+def _write_metadata(table_path: str, version: int, meta: dict) -> None:
+    """Publish ``meta`` as table version ``version``: write
+    ``v{version}.metadata.json``, then swap ``version-hint.text`` in
+    with one ``os.replace``, so a reader sees the old version or the new
+    one and never a half-written hint."""
+    mdir = _metadata_dir(table_path)
+    with open(os.path.join(mdir, f"v{version}.metadata.json"), "w") as f:
+        json.dump(meta, f, indent=2)
+    hint = os.path.join(mdir, "version-hint.text")
+    with open(hint + ".tmp", "w") as f:
+        f.write(str(version))
+    os.replace(hint + ".tmp", hint)
+
+
+def _commit_snapshot(table_path: str, meta: dict, snap_id: int, manifests: list[dict],
+                     summary: dict, carry_prior: bool = True,
+                     timestamp_ms: int | None = None) -> int:
+    """The commit every table write ends in. Writes the manifest list
+    (the current snapshot's manifests, when ``carry_prior``, then
+    ``manifests``), adds snapshot ``snap_id`` to ``meta`` and publishes
+    it as version ``snap_id`` (snapshot id = sequence number = version).
+    Without ``timestamp_ms`` the snapshot is stamped one past the
+    table's latest (1000 for a new table), so ``as_of_ms`` time travel
+    never sees time go backwards. Returns ``snap_id``."""
+    snaps = meta["snapshots"]
+    prior = []
+    if carry_prior and meta["current-snapshot-id"] != -1:
+        cur = next(s for s in snaps if s["snapshot-id"] == meta["current-snapshot-id"])
+        _s, prior = read_container_file(cur["manifest-list"])
+    ml_path = os.path.join(_metadata_dir(table_path), f"snap-{snap_id}-manifest-list.avro")
+    write_container_file(ml_path, MANIFEST_LIST_SCHEMA, prior + manifests)
+    ts = timestamp_ms if timestamp_ms is not None else (
+        max((s["timestamp-ms"] for s in snaps), default=999) + 1
     )
+    snapshot = {
+        "snapshot-id": snap_id,
+        "sequence-number": snap_id,
+        "timestamp-ms": ts,
+        "manifest-list": ml_path,
+        "schema-id": meta.get("current-schema-id", 0),
+        "summary": summary,
+    }
+    _write_metadata(table_path, snap_id, {
+        **meta,
+        "last-sequence-number": snap_id,
+        "last-updated-ms": ts,
+        "current-snapshot-id": snap_id,
+        "snapshots": snaps + [snapshot],
+        "snapshot-log": meta.get("snapshot-log", [])
+        + [{"timestamp-ms": ts, "snapshot-id": snap_id}],
+    })
+    return snap_id
 
 
 def write_iceberg(
@@ -334,25 +417,19 @@ def write_iceberg(
     table_path = os.path.abspath(table_path)
     os.makedirs(_metadata_dir(table_path), exist_ok=True)
     v = current_version(table_path)
-    meta = load_metadata(table_path) if v else None
+    meta = load_metadata(table_path) if v else _new_table_meta(table_path, df)
     # --- schema evolution: an append whose df carries NEW columns registers
     # a new schema (next schema-id); existing columns keep their field ids
     # (id stability is what keeps old files' stats/bounds valid), new
     # columns get fresh ids past last-column-id. Old data files simply lack
     # the new columns — the reader's schema-on-read fills nulls. Type
     # changes are rejected (only additive evolution is supported).
-    if meta:
-        prior_schemas = list(meta["schemas"])
-        cur_sid = meta.get("current-schema-id", 0)
-        base_fields = next(
-            s["fields"] for s in prior_schemas if s.get("schema-id", 0) == cur_sid
-        )
-        last_col_id = meta.get("last-column-id", len(base_fields))
-    else:
-        base_fields = _iceberg_schema_from_spark(df)
-        prior_schemas = [{"type": "struct", "schema-id": 0, "fields": base_fields}]
-        cur_sid = 0
-        last_col_id = len(base_fields)
+    prior_schemas = list(meta["schemas"])
+    cur_sid = meta.get("current-schema-id", 0)
+    base_fields = next(
+        s["fields"] for s in prior_schemas if s.get("schema-id", 0) == cur_sid
+    )
+    last_col_id = meta.get("last-column-id", len(base_fields))
     by_name0 = {f["name"]: f for f in base_fields}
     added_fields = []
     for f in df.schema.fields:
@@ -385,10 +462,8 @@ def write_iceberg(
     # --- partition-spec evolution: reuse a prior spec with the same shape,
     # else register a NEW spec (next spec-id, fresh partition field-id).
     # Old manifests keep their spec-id; the reader prunes per manifest.
-    prior_specs = list(meta["partition-specs"]) if meta else []
-    last_pfid = meta.get("last-partition-id", PARTITION_FIELD_ID_START - 1) if meta else (
-        PARTITION_FIELD_ID_START - 1
-    )
+    prior_specs = list(meta["partition-specs"])
+    last_pfid = meta.get("last-partition-id", PARTITION_FIELD_ID_START - 1)
     from ..functions.bucket import parse_bucket_transform
 
     nb = parse_bucket_transform(partition_transform)
@@ -416,77 +491,37 @@ def write_iceberg(
         prior_specs = prior_specs + [{"spec-id": spec_id, "fields": spec_fields}]
 
     snap_id = v + 1
-    seq = v + 1
-    # --- data files: full rows, one directory per identity-partition value.
+    # --- data files: full rows, one directory per partition value.
     # __part duplicates the partition column so partitionBy consumes the
     # copy and the real column stays IN the file (spec requirement).
     from pyspark.sql import functions as F
 
     data_dir = os.path.join(table_path, "data", f"snap-{snap_id}")
     part_info = _part_field_info(spec_fields[0] if spec_fields else None, ice_schema)
-    w = df
     if part_info:
         w = _with_part_col(df, part_info, "__part").repartition(F.col("__part"))
         w.write.partitionBy("__part").mode("overwrite").parquet(data_dir)
     else:
-        w.write.mode("overwrite").parquet(data_dir)
+        df.write.mode("overwrite").parquet(data_dir)
 
-    entries = _manifest_entries_for_dir(
-        data_dir, ice_schema, stats_cols, part_info, snap_id, seq
+    manifest = _write_data_manifest(
+        table_path, snap_id, data_dir, ice_schema, stats_cols, part_info, spec_id, spec_fields
     )
-    man_path = os.path.join(_metadata_dir(table_path), f"snap-{snap_id}-m0.avro")
-    write_container_file(man_path, manifest_entry_schema(spec_fields, ice_schema), entries)
-    part_summary = _partition_summary(entries, part_info, by_name)
-    new_manifest = _manifest_file_record(
-        man_path, spec_id, seq, snap_id, entries, part_summary
-    )
-
-    # --- manifest list: prior snapshot's manifests + the new one (append)
-    prior = []
-    if meta and meta.get("current-snapshot-id", -1) != -1:
-        cur = next(s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"])
-        _s, prior = read_container_file(cur["manifest-list"])
-    ml_path = os.path.join(_metadata_dir(table_path), f"snap-{snap_id}-manifest-list.avro")
-    write_container_file(ml_path, MANIFEST_LIST_SCHEMA, prior + [new_manifest])
-
-    ts = timestamp_ms if timestamp_ms is not None else snap_id * 1000
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": ts,
-        "manifest-list": ml_path,
-        "schema-id": cur_sid,
-        "summary": {
-            "operation": "append", "added-data-files": str(len(entries)),
-            **{str(k): str(v) for k, v in (summary_extra or {}).items()},
-        },
-    }
-    new_meta = {
-        "format-version": FORMAT_VERSION,
-        "table-uuid": "00000000-0000-0000-0000-000000000000",
-        "location": table_path,
-        "last-sequence-number": seq,
-        "last-updated-ms": ts,
+    meta = {
+        **meta,
         "last-column-id": last_col_id,
         "current-schema-id": cur_sid,
         "schemas": prior_schemas,
         "default-spec-id": spec_id,
-        "partition-specs": prior_specs if prior_specs else [{"spec-id": 0, "fields": []}],
+        "partition-specs": prior_specs,
         "last-partition-id": last_pfid,
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {},
-        "current-snapshot-id": snap_id,
-        "snapshots": (meta["snapshots"] if meta else []) + [snapshot],
-        "snapshot-log": (meta.get("snapshot-log", []) if meta else [])
-        + [{"timestamp-ms": ts, "snapshot-id": snap_id}],
-        "metadata-log": [],
     }
-    with open(os.path.join(_metadata_dir(table_path), f"v{snap_id}.metadata.json"), "w") as f:
-        json.dump(new_meta, f, indent=2)
-    with open(os.path.join(_metadata_dir(table_path), "version-hint.text"), "w") as f:
-        f.write(str(snap_id))
-    return snap_id
+    summary = {
+        "operation": "append", "added-data-files": str(manifest["added_files_count"]),
+        **{str(k): str(v) for k, v in (summary_extra or {}).items()},
+    }
+    return _commit_snapshot(table_path, meta, snap_id, [manifest], summary,
+                            timestamp_ms=timestamp_ms)
 
 
 def compact_table(spark, table_path: str, target_files: int = 1,
@@ -511,14 +546,8 @@ def compact_table(spark, table_path: str, target_files: int = 1,
 
     table_path = os.path.abspath(table_path)
     t = IcebergTable(table_path)
-    meta = t.meta
-    v = current_version(table_path)
-    snap_id, seq = v + 1, v + 1
-    ice_schema = t.schema_fields
-    spec_id = meta.get("default-spec-id", 0)
-    spec_fields = next(
-        sp["fields"] for sp in meta["partition-specs"] if sp["spec-id"] == spec_id
-    )
+    snap_id = current_version(table_path) + 1
+    ice_schema, spec_fields = t.schema_fields, t.partition_fields
     part_info = _part_field_info(spec_fields[0] if spec_fields else None, ice_schema)
     # keep the same stats columns the existing manifests carry
     stats_cols = _existing_stats_cols(t)
@@ -549,39 +578,12 @@ def compact_table(spark, table_path: str, target_files: int = 1,
     else:
         df.coalesce(target_files).write.mode("overwrite").parquet(data_dir)
 
-    entries = _manifest_entries_for_dir(data_dir, ice_schema, stats_cols, part_info, snap_id, seq)
-    man_path = os.path.join(_metadata_dir(table_path), f"snap-{snap_id}-m0.avro")
-    write_container_file(man_path, manifest_entry_schema(spec_fields, ice_schema), entries)
-    by_name = {f["name"]: f for f in ice_schema}
-    part_summary = _partition_summary(entries, part_info, by_name)
-    new_manifest = _manifest_file_record(man_path, spec_id, seq, snap_id, entries, part_summary)
-
-    ml_path = os.path.join(_metadata_dir(table_path), f"snap-{snap_id}-manifest-list.avro")
-    write_container_file(ml_path, MANIFEST_LIST_SCHEMA, [new_manifest])
-
-    ts = max(s["timestamp-ms"] for s in meta["snapshots"]) + 1
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": ts,
-        "manifest-list": ml_path,
-        "schema-id": meta.get("current-schema-id", 0),
-        "summary": {"operation": "replace", "rewritten-data-files": str(len(entries))},
-    }
-    new_meta = dict(meta)
-    new_meta.update({
-        "last-sequence-number": seq,
-        "last-updated-ms": ts,
-        "current-snapshot-id": snap_id,
-        "snapshots": meta["snapshots"] + [snapshot],
-        "snapshot-log": meta.get("snapshot-log", [])
-        + [{"timestamp-ms": ts, "snapshot-id": snap_id}],
-    })
-    with open(os.path.join(_metadata_dir(table_path), f"v{snap_id}.metadata.json"), "w") as f:
-        json.dump(new_meta, f, indent=2)
-    with open(os.path.join(_metadata_dir(table_path), "version-hint.text"), "w") as f:
-        f.write(str(snap_id))
-    return snap_id
+    manifest = _write_data_manifest(
+        table_path, snap_id, data_dir, ice_schema, stats_cols, part_info,
+        t.meta.get("default-spec-id", 0), spec_fields,
+    )
+    summary = {"operation": "replace", "rewritten-data-files": str(manifest["added_files_count"])}
+    return _commit_snapshot(table_path, t.meta, snap_id, [manifest], summary, carry_prior=False)
 
 
 def _snapshot_referenced_paths(snap: dict) -> set[str]:
@@ -632,19 +634,13 @@ def expire_snapshots(table_path: str, keep_last: int = 1,
         if os.path.exists(p):
             os.remove(p)
 
-    v = current_version(table_path)
-    new_v = v + 1
-    new_meta = dict(meta)
-    new_meta.update({
+    _write_metadata(table_path, current_version(table_path) + 1, {
+        **meta,
         "snapshots": survivors,
         "snapshot-log": [
             e for e in meta.get("snapshot-log", []) if e["snapshot-id"] in keep_ids
         ],
     })
-    with open(os.path.join(_metadata_dir(table_path), f"v{new_v}.metadata.json"), "w") as f:
-        json.dump(new_meta, f, indent=2)
-    with open(os.path.join(_metadata_dir(table_path), "version-hint.text"), "w") as f:
-        f.write(str(new_v))
     return len(expired)
 
 
@@ -678,19 +674,12 @@ def delete_rows(spark, table_path: str, filters=None, timestamp_ms: int | None =
         )
     table_path = os.path.abspath(table_path)
     t = IcebergTable(table_path)
-    meta = t.meta
-    v = current_version(table_path)
-    snap_id, seq = v + 1, v + 1
+    snap_id = current_version(table_path) + 1
     tasks, _report = t.plan_files(filters=filters)
     ddl = spark_schema_ddl(t.schema_fields)
     if tasks:
         df = spark.read.schema(ddl).parquet(*[task.path for task in tasks])
-        for (col, op, value) in filters or []:
-            c = F.col(col)
-            df = df.filter(
-                {"=": c == value, "<": c < value, "<=": c <= value,
-                 ">": c > value, ">=": c >= value}[op]
-            )
+        df = _filter_rows(df, filters)
         if predicate is not None:
             df = df.filter(predicate)
         tomb = df.select(
@@ -712,75 +701,7 @@ def delete_rows(spark, table_path: str, filters=None, timestamp_ms: int | None =
         "file_path", "pos"
     ).write.mode("overwrite").parquet(del_dir)
 
-    entries = []
-    n_deletes = 0
-    for fn in sorted(os.listdir(del_dir)):
-        if not fn.endswith(".parquet"):
-            continue
-        p = os.path.join(del_dir, fn)
-        import pyarrow.parquet as pq
-
-        nrows = pq.ParquetFile(p).metadata.num_rows
-        n_deletes += nrows
-        entries.append({
-            "status": STATUS_ADDED,
-            "snapshot_id": snap_id,
-            "sequence_number": seq,
-            "file_sequence_number": seq,
-            "data_file": {
-                "content": 1,  # POSITION_DELETES
-                "file_path": p,
-                "file_format": "PARQUET",
-                "partition": {},
-                "record_count": nrows,
-                "file_size_in_bytes": os.path.getsize(p),
-                "null_value_counts": None,
-                "lower_bounds": None,
-                "upper_bounds": None,
-                "equality_ids": None,
-            },
-        })
-    man_path = os.path.join(_metadata_dir(table_path), f"snap-{snap_id}-deletes-m0.avro")
-    # delete manifests carry an empty partition struct (path-scoped deletes)
-    write_container_file(man_path, manifest_entry_schema([], t.schema_fields), entries)
-    delete_manifest = _manifest_file_record(
-        man_path, meta.get("default-spec-id", 0), seq, snap_id, entries, None, content=1
-    )
-
-    cur = next(s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"])
-    _s, prior = read_container_file(cur["manifest-list"])
-    ml_path = os.path.join(_metadata_dir(table_path), f"snap-{snap_id}-manifest-list.avro")
-    write_container_file(ml_path, MANIFEST_LIST_SCHEMA, prior + [delete_manifest])
-
-    ts = timestamp_ms if timestamp_ms is not None else (
-        max(s["timestamp-ms"] for s in meta["snapshots"]) + 1
-    )
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": ts,
-        "manifest-list": ml_path,
-        "schema-id": meta.get("current-schema-id", 0),
-        "summary": {
-            "operation": "delete",
-            "added-delete-files": str(len(entries)),
-            "added-position-deletes": str(n_deletes),
-        },
-    }
-    new_meta = dict(meta)
-    new_meta.update({
-        "last-sequence-number": seq,
-        "last-updated-ms": ts,
-        "current-snapshot-id": snap_id,
-        "snapshots": meta["snapshots"] + [snapshot],
-        "snapshot-log": meta.get("snapshot-log", [])
-        + [{"timestamp-ms": ts, "snapshot-id": snap_id}],
-    })
-    with open(os.path.join(_metadata_dir(table_path), f"v{snap_id}.metadata.json"), "w") as f:
-        json.dump(new_meta, f, indent=2)
-    with open(os.path.join(_metadata_dir(table_path), "version-hint.text"), "w") as f:
-        f.write(str(snap_id))
-    return snap_id
+    return _commit_delete_files(t, snap_id, del_dir, content=1, timestamp_ms=timestamp_ms)
 
 
 def delete_rows_equality(spark, table_path: str, keys_df, key_cols,
@@ -804,9 +725,7 @@ def delete_rows_equality(spark, table_path: str, keys_df, key_cols,
     new snapshot id."""
     table_path = os.path.abspath(table_path)
     t = IcebergTable(table_path)
-    meta = t.meta
-    v = current_version(table_path)
-    snap_id, seq = v + 1, v + 1
+    snap_id = current_version(table_path) + 1
     key_cols = list(key_cols)
     ids_by_name = {f["name"]: f["id"] for f in t.schema_fields}
     eq_ids = [ids_by_name[c] for c in key_cols]
@@ -823,74 +742,8 @@ def delete_rows_equality(spark, table_path: str, keys_df, key_cols,
     finally:
         keys.unpersist()
 
-    import pyarrow.parquet as pq
-
-    entries = []
-    n_deletes = 0
-    for fn in sorted(os.listdir(del_dir)):
-        if not fn.endswith(".parquet"):
-            continue
-        p = os.path.join(del_dir, fn)
-        nrows = pq.ParquetFile(p).metadata.num_rows
-        n_deletes += nrows
-        entries.append({
-            "status": STATUS_ADDED,
-            "snapshot_id": snap_id,
-            "sequence_number": seq,
-            "file_sequence_number": seq,
-            "data_file": {
-                "content": 2,  # EQUALITY_DELETES
-                "file_path": p,
-                "file_format": "PARQUET",
-                "partition": {},
-                "record_count": nrows,
-                "file_size_in_bytes": os.path.getsize(p),
-                "null_value_counts": None,
-                "lower_bounds": None,
-                "upper_bounds": None,
-                "equality_ids": eq_ids,
-            },
-        })
-    man_path = os.path.join(_metadata_dir(table_path), f"snap-{snap_id}-eqdeletes-m0.avro")
-    write_container_file(man_path, manifest_entry_schema([], t.schema_fields), entries)
-    delete_manifest = _manifest_file_record(
-        man_path, meta.get("default-spec-id", 0), seq, snap_id, entries, None, content=1
-    )
-
-    cur = next(s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"])
-    _s, prior = read_container_file(cur["manifest-list"])
-    ml_path = os.path.join(_metadata_dir(table_path), f"snap-{snap_id}-manifest-list.avro")
-    write_container_file(ml_path, MANIFEST_LIST_SCHEMA, prior + [delete_manifest])
-
-    ts = timestamp_ms if timestamp_ms is not None else (
-        max(s["timestamp-ms"] for s in meta["snapshots"]) + 1
-    )
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": ts,
-        "manifest-list": ml_path,
-        "schema-id": meta.get("current-schema-id", 0),
-        "summary": {
-            "operation": "delete",
-            "added-delete-files": str(len(entries)),
-            "added-equality-deletes": str(n_deletes),
-        },
-    }
-    new_meta = dict(meta)
-    new_meta.update({
-        "last-sequence-number": seq,
-        "last-updated-ms": ts,
-        "current-snapshot-id": snap_id,
-        "snapshots": meta["snapshots"] + [snapshot],
-        "snapshot-log": meta.get("snapshot-log", [])
-        + [{"timestamp-ms": ts, "snapshot-id": snap_id}],
-    })
-    with open(os.path.join(_metadata_dir(table_path), f"v{snap_id}.metadata.json"), "w") as f:
-        json.dump(new_meta, f, indent=2)
-    with open(os.path.join(_metadata_dir(table_path), "version-hint.text"), "w") as f:
-        f.write(str(snap_id))
-    return snap_id
+    return _commit_delete_files(t, snap_id, del_dir, content=2, timestamp_ms=timestamp_ms,
+                                equality_ids=eq_ids)
 
 
 def upsert(spark, table_path: str, df, key_cols,
@@ -1025,18 +878,65 @@ def _coerce_partition_value(raw: str | None, ice_type: str):
     return s
 
 
-def _manifest_entries_for_dir(data_dir, ice_schema, stats_cols, part_field, snap_id, seq):
-    """``part_field``: a normalized :func:`_part_field_info` dict (or a
-    bare column-name string for identity callers, or None)."""
-    if isinstance(part_field, str):
-        part_field = {
-            "name": part_field,
-            "result_type": next(
-                f["type"] for f in ice_schema if f["name"] == part_field
-            ),
-        }
-    part_col = part_field["name"] if part_field else None
-    part_type = part_field["result_type"] if part_field else None
+def _manifest_entry(snap_id: int, path: str, record_count: int, **data_file) -> dict:
+    """ADDED manifest entry for one parquet file; ``data_file`` overrides
+    the defaults (content 0 = data, 1 = position deletes, 2 = equality
+    deletes; partition, stats maps and equality ids empty)."""
+    return {
+        "status": STATUS_ADDED,
+        "snapshot_id": snap_id,
+        "sequence_number": snap_id,
+        "file_sequence_number": snap_id,
+        "data_file": {
+            "content": 0,
+            "file_path": path,
+            "file_format": "PARQUET",
+            "partition": {},
+            "record_count": record_count,
+            "file_size_in_bytes": os.path.getsize(path),
+            "null_value_counts": None,
+            "lower_bounds": None,
+            "upper_bounds": None,
+            "equality_ids": None,
+            **data_file,
+        },
+    }
+
+
+def _write_manifest(table_path, snap_id, file_dir, entries, spec_id, spec_fields,
+                    ice_schema, partitions=None, content=0) -> dict:
+    """Write ``entries`` (the files under ``file_dir``) as the manifest
+    ``<file_dir name>-m0.avro`` and return its manifest-list record
+    (``content`` 0 = data manifest, 1 = delete manifest)."""
+    man_path = os.path.join(
+        _metadata_dir(table_path), f"{os.path.basename(file_dir)}-m0.avro"
+    )
+    write_container_file(man_path, manifest_entry_schema(spec_fields, ice_schema), entries)
+    return {
+        "manifest_path": man_path,
+        "manifest_length": os.path.getsize(man_path),
+        "partition_spec_id": spec_id,
+        "content": content,
+        "sequence_number": snap_id,
+        "min_sequence_number": snap_id,
+        "added_snapshot_id": snap_id,
+        "added_files_count": len(entries),
+        "existing_files_count": 0,
+        "deleted_files_count": 0,
+        "added_rows_count": sum(e["data_file"]["record_count"] for e in entries),
+        "existing_rows_count": 0,
+        "deleted_rows_count": 0,
+        "partitions": partitions,
+    }
+
+
+def _write_data_manifest(table_path, snap_id, data_dir, ice_schema, stats_cols,
+                         part_info, spec_id, spec_fields) -> dict:
+    """Manifest every parquet data file under ``data_dir`` — partition
+    value from its ``__part=`` directory (``part_info``: a
+    :func:`_part_field_info` dict, or None), stats from its footer."""
+    part_col = part_info["name"] if part_info else None
+    part_type = part_info["result_type"] if part_info else None
     entries = []
     for root, _dirs, files in sorted(os.walk(data_dir)):
         part_val = None
@@ -1047,35 +947,50 @@ def _manifest_entries_for_dir(data_dir, ice_schema, stats_cols, part_field, snap
             if not fn.endswith(".parquet"):
                 continue
             p = os.path.join(root, fn)
-            n, size, nulls, lo, hi = _file_stats(p, ice_schema, stats_cols)
-            entries.append({
-                "status": STATUS_ADDED,
-                "snapshot_id": snap_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": {
-                    "content": 0,
-                    "file_path": p,
-                    "file_format": "PARQUET",
-                    "partition": {part_col: part_val} if part_col else {},
-                    "record_count": n,
-                    "file_size_in_bytes": size,
-                    "null_value_counts": nulls,
-                    "lower_bounds": lo,
-                    "upper_bounds": hi,
-                    "equality_ids": None,
-                },
-            })
-    return entries
+            n, stats = _file_stats(p, ice_schema, stats_cols)
+            entries.append(_manifest_entry(
+                snap_id, p, n, partition={part_col: part_val} if part_col else {}, **stats
+            ))
+    return _write_manifest(
+        table_path, snap_id, data_dir, entries, spec_id, spec_fields, ice_schema,
+        _partition_summary(entries, part_info),
+    )
 
 
-def _partition_summary(entries, part_field, by_name):
-    """``part_field``: _part_field_info dict, bare identity column name,
-    or None."""
+def _commit_delete_files(t: "IcebergTable", snap_id: int, del_dir: str, content: int,
+                         timestamp_ms: int | None, equality_ids=None) -> int:
+    """Commit the delete files Spark wrote under ``del_dir`` (``content``
+    1 = position, 2 = equality deletes over ``equality_ids``) as one
+    delete manifest on top of ``t``'s current snapshot. The manifest
+    carries an empty partition struct: the deletes are path- or
+    key-scoped, not partition-scoped."""
+    import pyarrow.parquet as pq
+
+    entries = [
+        _manifest_entry(snap_id, p, pq.ParquetFile(p).metadata.num_rows,
+                        content=content, equality_ids=equality_ids)
+        for p in (os.path.join(del_dir, fn) for fn in sorted(os.listdir(del_dir)))
+        if p.endswith(".parquet")
+    ]
+    manifest = _write_manifest(
+        t.path, snap_id, del_dir, entries, t.meta.get("default-spec-id", 0), [],
+        t.schema_fields, content=1,
+    )
+    family = "position" if content == 1 else "equality"
+    summary = {
+        "operation": "delete",
+        "added-delete-files": str(len(entries)),
+        f"added-{family}-deletes": str(manifest["added_rows_count"]),
+    }
+    return _commit_snapshot(t.path, t.meta, snap_id, [manifest], summary,
+                            timestamp_ms=timestamp_ms)
+
+
+def _partition_summary(entries, part_field):
+    """Manifest-list partition field summary (``part_field``: a
+    :func:`_part_field_info` dict, or None)."""
     if not part_field:
         return None
-    if isinstance(part_field, str):
-        part_field = {"name": part_field, "result_type": by_name[part_field]["type"]}
     part_col = part_field["name"]
     vals = [e["data_file"]["partition"][part_col] for e in entries]
     non_null = [x for x in vals if x is not None]
@@ -1088,24 +1003,18 @@ def _partition_summary(entries, part_field, by_name):
     }]
 
 
-def _manifest_file_record(man_path, spec_id, seq, snap_id, entries, part_summary,
-                          content=0):
-    return {
-        "manifest_path": man_path,
-        "manifest_length": os.path.getsize(man_path),
-        "partition_spec_id": spec_id,
-        "content": content,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snap_id,
-        "added_files_count": len(entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": sum(e["data_file"]["record_count"] for e in entries),
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-        "partitions": part_summary,
-    }
+def _filter_rows(df, filters):
+    """``df`` with each ``(col, op, literal)`` filter applied Spark-side
+    (op in =, <, <=, >, >=)."""
+    from pyspark.sql import functions as F
+
+    for (col, op, value) in filters or []:
+        c = F.col(col)
+        df = df.filter(
+            {"=": c == value, "<": c < value, "<=": c <= value,
+             ">": c > value, ">=": c >= value}[op]
+        )
+    return df
 
 
 # ---------------------------------------------------------------------------
@@ -1389,8 +1298,6 @@ class IcebergTable:
         set falls back to a shuffle anti-join (sort-merge on the null-safe
         key equality, the per-file sequence gate applied as the join's
         residual condition) rather than blowing the broadcast budget."""
-        from pyspark.sql import functions as F
-
         tasks, _report = self.plan_files(snapshot_id, as_of_ms, filters)
         ddl = spark_schema_ddl(
             self._schema_for_snapshot(self._resolve_snapshot(snapshot_id, as_of_ms))
@@ -1402,13 +1309,7 @@ class IcebergTable:
         df = self._apply_deletes(
             spark, df, tasks, del_entries, eq_delete_broadcast_max_rows
         )
-        for (col, op, value) in filters or []:
-            c = F.col(col)
-            df = df.filter(
-                {"=": c == value, "<": c < value, "<=": c <= value,
-                 ">": c > value, ">=": c >= value}[op]
-            )
-        return df
+        return _filter_rows(df, filters)
 
     def _apply_deletes(self, spark, df, tasks, del_entries,
                        eq_delete_broadcast_max_rows: int = 4 << 20):

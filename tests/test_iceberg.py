@@ -722,3 +722,46 @@ def test_iceberg_compaction_replace_snapshot(spark, tmp_path):
     write_iceberg(spark, extra, path, partition_by="lang", stats_cols=("doc_id",))
     assert c.poll(spark, lambda d, s: batches.append((s, d.count()))) == 1
     assert batches[-1][1] == 1
+
+
+def test_iceberg_default_timestamp_never_goes_backwards(spark, tmp_path):
+    """An append without ``timestamp_ms`` is stamped one past the table's
+    latest snapshot, so ``as_of_ms`` time travel keeps snapshot order: a
+    default stamp of ``snapshot id * 1000`` would put snapshot 2 (2000)
+    before snapshot 1 (5000), hiding it from as_of_ms=6000 and exposing
+    all 20 rows at as_of_ms=3000."""
+    path = str(tmp_path / "tbl")
+    df = spark.createDataFrame([(i,) for i in range(20)], "id LONG")
+    write_iceberg(spark, df.filter("id < 10"), path, timestamp_ms=5000)
+    write_iceberg(spark, df.filter("id >= 10"), path)
+    t = IcebergTable(path)
+    assert [(s["snapshot-id"], s["timestamp-ms"]) for s in t.snapshots()] == [
+        (1, 5000), (2, 5001)
+    ]
+    assert t.scan(spark, as_of_ms=6000).count() == 20
+    assert t.scan(spark, as_of_ms=5000).count() == 10
+    with pytest.raises(ValueError, match="no snapshot at or before"):
+        t.scan(spark, as_of_ms=3000)
+
+
+def test_iceberg_failed_hint_swap_keeps_previous_snapshot(spark, tmp_path, monkeypatch):
+    """``version-hint.text`` is replaced in one rename, never rewritten in
+    place: when the rename fails the write raises and readers still see
+    the previous snapshot."""
+    from robosat_spark.sources import iceberg
+
+    path = str(tmp_path / "tbl")
+    df = spark.createDataFrame([(i,) for i in range(20)], "id LONG")
+    write_iceberg(spark, df.filter("id < 10"), path, timestamp_ms=1000)
+
+    def no_replace(src, dst):
+        raise OSError("rename failed")
+
+    monkeypatch.setattr(iceberg.os, "replace", no_replace)
+    with pytest.raises(OSError, match="rename failed"):
+        write_iceberg(spark, df.filter("id >= 10"), path, timestamp_ms=2000)
+    monkeypatch.undo()
+    assert iceberg.current_version(path) == 1
+    t = IcebergTable(path)
+    assert [s["snapshot-id"] for s in t.snapshots()] == [1]
+    assert {r["id"] for r in t.scan(spark).collect()} == set(range(10))
