@@ -298,14 +298,43 @@ def _q_hex_encode(spark, sf_dir):
     )
 
 
+# the modules that write the Iceberg gate fixtures: their source is part of
+# each fixture's cache key
+_ICEBERG_WRITER = ("robosat_spark.sources.iceberg", "robosat_spark.sources.avro_codec")
+
+
+def _fixture_key(sf_dir: str, table: str, salt: str = "",
+                 writers: tuple[str, ...] = _ICEBERG_WRITER) -> str:
+    """16-hex cache key of a build-once fixture under the temp dir: the
+    (path, size, mtime) of every file of ``sf_dir/<table>.parquet``,
+    ``salt``, and the source bytes of each module in ``writers``. A
+    regenerated input and a changed writer both miss the cache, so a
+    gate run always reads a table the current code wrote."""
+    import hashlib
+    import importlib
+    import os
+
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    files = [src] if os.path.isfile(src) else sorted(
+        os.path.join(src, f) for f in os.listdir(src) if f.endswith(".parquet")
+    )
+    h = hashlib.md5(salt.encode())
+    for p in files:
+        st = os.stat(p)
+        h.update(f"|{p}:{st.st_size}:{int(st.st_mtime)}".encode())
+    for mod in writers:
+        with open(importlib.import_module(mod).__file__, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()[:16]
+
+
 def _zordered_pages_path(spark, sf_dir: str, zoom: int) -> str:
     """Materialize (once per sf_dir content) the pages table as a REAL
     Z-ordered parquet layout: a stored ``morton`` column, range-partitioned
     and sorted by it, so row-group min/max stats are spatially tight and
     the BETWEEN predicates of :func:`_q_morton_bbox` prune at the scan.
-    Keyed by the events file's (size, mtime) so a regenerated fixture
-    invalidates the cache."""
-    import hashlib
+    Keyed by the events files' (size, mtime) so a regenerated fixture
+    invalidates the cache (``_fixture_key``)."""
     import os
     import tempfile
 
@@ -313,14 +342,7 @@ def _zordered_pages_path(spark, sf_dir: str, zoom: int) -> str:
     from robosat_spark.operators.spatial_join import geotagged_points
     from robosat_spark.sources.pages import pages_from_events
 
-    st_parts = []
-    ev_dir = os.path.join(sf_dir, "events.parquet")
-    for p in ([ev_dir] if os.path.isfile(ev_dir) else sorted(
-        os.path.join(ev_dir, f) for f in os.listdir(ev_dir) if f.endswith(".parquet")
-    )):
-        st = os.stat(p)
-        st_parts.append(f"{p}:{st.st_size}:{int(st.st_mtime)}")
-    key = hashlib.md5(("|".join(st_parts) + f"|z{zoom}").encode()).hexdigest()[:16]
+    key = _fixture_key(sf_dir, "events", f"z{zoom}", writers=())
     path = os.path.join(tempfile.gettempdir(), f"robosat_zorder_{key}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         pts = geotagged_points(pages_from_events(spark, sf_dir), zoom=zoom).withColumn(
@@ -419,7 +441,6 @@ def _q_iceberg_pages_pip(spark, sf_dir):
     build-once snapshot of ``pages_from_events`` with url file stats)
     instead of raw parquet. Same oracle as ``pip_assign`` — the storage
     layer must be invisible to the result."""
-    import hashlib
     import os
     import tempfile
 
@@ -428,14 +449,7 @@ def _q_iceberg_pages_pip(spark, sf_dir):
     from robosat_spark.sources.oracle_features import oracle_rect_features
     from robosat_spark.sources.pages import pages_from_events
 
-    ev_dir = os.path.join(sf_dir, "events.parquet")
-    st_parts = []
-    for p in ([ev_dir] if os.path.isfile(ev_dir) else sorted(
-        os.path.join(ev_dir, f) for f in os.listdir(ev_dir) if f.endswith(".parquet")
-    )):
-        st = os.stat(p)
-        st_parts.append(f"{p}:{st.st_size}:{int(st.st_mtime)}")
-    key = hashlib.md5(("pages|" + "|".join(st_parts)).encode()).hexdigest()[:16]
+    key = _fixture_key(sf_dir, "events", "pages")
     path = os.path.join(tempfile.gettempdir(), f"robosat_iceberg_pages_{key}")
     if current_version(path) < 1:
         write_iceberg(
@@ -2146,6 +2160,8 @@ def _q_url_curation(spark, sf_dir):
     size). ``documents``
     carries no url column, so one is synthesized deterministically from
     doc_id over 12 host shapes (both engines replay the same printf)."""
+    import pyarrow as pa
+
     from robosat_spark.functions.text import redact_pii
     from robosat_spark.functions.urls import domain_counts, filter_blocklisted_domains
 
@@ -2157,7 +2173,10 @@ def _q_url_curation(spark, sf_dir):
     pages = docs.select(
         F.format_string("https://%s/d/%d", host, F.col("doc_id")).alias("url")
     )
-    blocklist = spark.createDataFrame([(d,) for d in _URL_BLOCKLIST], "domain STRING")
+    # an Arrow table plans a LocalTableScan, not a Scan ExistingRDD
+    blocklist = spark.createDataFrame(
+        pa.table({"domain": pa.array(list(_URL_BLOCKLIST), pa.string())})
+    )
     counts = domain_counts(pages).select(
         F.lit("domain_counts").alias("part"),
         F.col("domain").alias("key"),
@@ -2183,31 +2202,24 @@ def _q_url_curation(spark, sf_dir):
 def _iceberg_documents_fixture(spark, sf_dir: str, tag: str, target_version: int,
                                build) -> str:
     """Build-once Iceberg fixture over ``documents``, keyed by the input
-    parquet stat fingerprint. Crash-idempotent: a table below
+    parquet stat fingerprint and the writer's source (``_fixture_key``).
+    Crash-idempotent: a table below
     ``target_version`` is a partial build (e.g. the base append committed
     but the delete/upsert step did not), so it is REMOVED and rebuilt
     from scratch — re-running ``build`` on a half-built table would
     append the base rows a second time and the stable cache key would
     then pin the corrupt table forever."""
-    import hashlib
     import os
     import shutil
     import tempfile
 
     from robosat_spark.sources.iceberg import current_version
 
-    doc_dir = os.path.join(sf_dir, "documents.parquet")
-    st_parts = []
-    for p in ([doc_dir] if os.path.isfile(doc_dir) else sorted(
-        os.path.join(doc_dir, f) for f in os.listdir(doc_dir) if f.endswith(".parquet")
-    )):
-        st = os.stat(p)
-        st_parts.append(f"{p}:{st.st_size}:{int(st.st_mtime)}")
-    key = hashlib.md5((tag + "|" + "|".join(st_parts)).encode()).hexdigest()[:16]
+    key = _fixture_key(sf_dir, "documents", tag)
     path = os.path.join(tempfile.gettempdir(), f"robosat_iceberg_{tag}_{key}")
     if current_version(path) < target_version:
         shutil.rmtree(path, ignore_errors=True)
-        build(spark.read.parquet(doc_dir), path)
+        build(spark.read.parquet(os.path.join(sf_dir, "documents.parquet")), path)
     return path
 
 
@@ -2460,10 +2472,9 @@ def _hll_slice_tables(spark, sf_dir: str) -> list[str]:
     """Build-once: two Iceberg tables, each holding the HLL register
     table of one url-parity slice of pages — the stored per-slice sketch
     artifact of the merge gate. Keyed by the events parquet stat
-    fingerprint (same caching scheme as _iceberg_documents_fixture);
+    fingerprint and the writer's source (``_fixture_key``);
     crash-idempotent: any table below version 1 triggers a full rebuild
     of BOTH (a half-built pair would merge a stale slice)."""
-    import hashlib
     import os
     import shutil
     import tempfile
@@ -2472,14 +2483,7 @@ def _hll_slice_tables(spark, sf_dir: str) -> list[str]:
     from robosat_spark.sources.iceberg import current_version, write_iceberg
     from robosat_spark.sources.pages import pages_from_events
 
-    ev_dir = os.path.join(sf_dir, "events.parquet")
-    st_parts = []
-    for p in ([ev_dir] if os.path.isfile(ev_dir) else sorted(
-        os.path.join(ev_dir, f) for f in os.listdir(ev_dir) if f.endswith(".parquet")
-    )):
-        st = os.stat(p)
-        st_parts.append(f"{p}:{st.st_size}:{int(st.st_mtime)}")
-    key = hashlib.md5("|".join(st_parts).encode()).hexdigest()[:16]
+    key = _fixture_key(sf_dir, "events")
     base = os.path.join(tempfile.gettempdir(), f"robosat_hll_slices_{key}")
     paths = [os.path.join(base, f"slice{i}") for i in range(2)]
     if any(current_version(p) < 1 for p in paths):

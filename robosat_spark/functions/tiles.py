@@ -221,16 +221,23 @@ def morton_range_filter(morton_col: Column, ranges: list[tuple[int, int]]) -> Co
 
 
 def neighbor_offsets_df(spark, include_self: bool = False):
-    """Tiny 8-row (dx, dy) offsets DataFrame for halo/adjacency joins
-    (J6 pattern, /root/reference/robosat/tiles.py:139-159). Always
-    broadcast by Catalyst (8 rows)."""
+    """Tiny 8-row (dx INT, dy INT) offsets DataFrame for halo/adjacency
+    joins (J6 pattern, /root/reference/robosat/tiles.py:139-159); 9 rows
+    with ``include_self``. Always broadcast by Catalyst. Built from a
+    ``pyarrow.Table``, so it plans a ``LocalTableScan`` rather than a
+    ``Scan ExistingRDD`` of a pickled Python RDD."""
+    import pyarrow as pa
+
     rows = [
         (dx, dy)
         for dx in (-1, 0, 1)
         for dy in (-1, 0, 1)
         if include_self or not (dx == 0 and dy == 0)
     ]
-    return spark.createDataFrame(rows, "dx INT, dy INT")
+    dx, dy = zip(*rows)
+    return spark.createDataFrame(
+        pa.table({"dx": pa.array(dx, pa.int32()), "dy": pa.array(dy, pa.int32())})
+    )
 
 
 def tile_parent(x: Column, y: Column, levels: int = 1) -> tuple[Column, Column]:

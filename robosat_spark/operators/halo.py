@@ -22,6 +22,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.tiles import neighbor_offsets_df
 from .rasterize import MASK_SCHEMA, decode_masks, encode_masks, map_masks
 
 
@@ -29,12 +30,9 @@ def stitch_halo(spark: SparkSession, masks: DataFrame, overlap: int = 32) -> Dat
     """masks(z,x,y,w,h,data) -> same keys, (w+2*overlap, h+2*overlap) grids.
 
     Missing neighbors contribute zeros (nodata fill, tiles.py:200-207)."""
-    offsets = spark.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)], "dx INT, dy INT"
-    )
     probes = masks.select(
         F.col("z"), F.col("x").alias("cx"), F.col("y").alias("cy")
-    ).crossJoin(F.broadcast(offsets)).select(
+    ).crossJoin(F.broadcast(neighbor_offsets_df(spark, include_self=True))).select(
         "z", "cx", "cy", (F.col("cx") + F.col("dx")).alias("nx"),
         (F.col("cy") + F.col("dy")).alias("ny"), "dx", "dy",
     )

@@ -31,11 +31,12 @@ from __future__ import annotations
 
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tiles import geotag_lat_fast, geotag_lon_fast, pack_tile_id, tile_x, tile_y
-from ..kernels.geometry import as_ring
+from ..kernels.geometry import rings_from_arrow
 
 
 def geotagged_points(pages: DataFrame, zoom: int) -> DataFrame:
@@ -83,21 +84,23 @@ def _collect_feature_index(features: DataFrame, zoom: int):
 
     The 'R-tree' of the reference (/root/reference/robosat/spatial/core.py:80-100)
     becomes a tile-bucketed index: the cover expansion IS the spatial index,
-    and equi-join on tile_id replaces the bbox probe. One collect of the
-    (small) feature table, then the cover kernel runs IN the driver — no
-    Spark job, no Python-worker spin-up, ~ms instead of seconds of fixed
-    cost per query."""
-    from ..functions.tiles import pack_tile_id_py
+    and equi-join on tile_id replaces the bbox probe. One Arrow collect of
+    the (small) feature table, read through the ring codec, then the cover
+    kernel runs IN the driver and the cover cells are packed into tile ids
+    in NumPy — no Spark job, no Python-worker spin-up, no per-point or
+    per-tile Python objects."""
+    from ..kernels.mercator import pack_tile_id as pack_tile_ids
     from ..kernels.raster import cover_rings
 
     tile_map: dict[int, list[int]] = {}
     rings_map: dict[int, list] = {}
-    for row in features.select("feature_id", "rings").collect():
-        fid = row["feature_id"]
-        rings = [as_ring(r) for r in row["rings"]]
+    table = features.select("feature_id", "rings").toArrow()
+    fids = table.column("feature_id").to_pylist()
+    for fid, rings in zip(fids, rings_from_arrow(table.column("rings"))):
         rings_map[fid] = rings
-        for x, y in cover_rings(rings, zoom):
-            tile_map.setdefault(pack_tile_id_py(zoom, int(x), int(y)), []).append(fid)
+        xy = cover_rings(rings, zoom)
+        for t in pack_tile_ids(xy[:, 0], xy[:, 1], zoom).tolist():
+            tile_map.setdefault(t, []).append(fid)
     return tile_map, rings_map
 
 
@@ -191,8 +194,6 @@ def _emit_rows(batch, tids, hits):
     ``feature_id`` — the url/warc_ts payload NEVER becomes Python objects.
     mapInArrow binds output columns POSITIONALLY to the declared schema,
     so the order is exactly ``_ROWS_SCHEMA``'s."""
-    import pyarrow as pa
-
     take = pa.array(np.concatenate([hit for _, hit in hits]))
     fids = np.concatenate([np.full(hit.size, fid, dtype=np.int64) for fid, hit in hits])
     cols = [batch.column(name).take(take) for name in _ROW_COLS]
@@ -205,8 +206,6 @@ def _emit_counts(batch, tids, hits):
     """Count readout with MAP-SIDE COMBINE: one (tile_id, feature_id, n)
     row per hit group instead of one row per hit — output bytes drop from
     O(hits) to O(distinct groups per batch)."""
-    import pyarrow as pa
-
     t_arr, f_arr, n_arr = [], [], []
     for fid, hit in hits:
         ts, cs = np.unique(tids[hit], return_counts=True)
@@ -219,10 +218,47 @@ def _emit_counts(batch, tids, hits):
     )
 
 
+# rows one refine pass gathers from its task's Arrow batches (see
+# ``_refine_factory``)
+_REFINE_BATCH_ROWS = 65_536
+
+
+def _coalesce_batches(batches, cap: int = _REFINE_BATCH_ROWS):
+    """Regroup a task's record batches into batches of at most ``cap``
+    rows, in order. Empty batches are dropped; a single input batch
+    larger than ``cap`` passes whole."""
+    pending, n = [], 0
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        if pending and n + batch.num_rows > cap:
+            yield _concat(pending)
+            pending, n = [], 0
+        pending.append(batch)
+        n += batch.num_rows
+    if pending:
+        yield _concat(pending)
+
+
+def _concat(batches):
+    if len(batches) == 1:
+        return batches[0]
+    return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+
+
 def _refine_factory(bc_index, emit):
     """Arrow-native PIP refine for ``mapInArrow``: numeric columns are read
     zero-copy into NumPy, the edge tables are built once per task, and
-    ``emit`` turns each batch's hits into the readout's record batch.
+    ``emit`` turns each refine pass's hits into the readout's record batch.
+
+    Whole-task batches: the refine first concatenates its task's incoming
+    batches, up to ``_REFINE_BATCH_ROWS`` rows. At the session's
+    ``maxRecordsPerBatch`` of 2048 each batch touches hundreds of
+    features, so the refine made one small ``_pip_pre`` call per feature
+    per 2048 rows, and per-call overhead, not PIP arithmetic, was most of
+    its time (on the 143,639 prefiltered flagship points: 1.40 s CPU at
+    2048-row batches, 0.24 s at 36k rows, 0.17 s as one batch). The cap
+    bounds the memory of one pass; the session conf is left alone.
 
     Arrow end to end matters at scale: the earlier pandas form turned every
     url into a Python string object and back (15M allocations per 15M rows),
@@ -231,9 +267,7 @@ def _refine_factory(bc_index, emit):
     def refine(batches):
         tile_map, rings_map = bc_index.value
         pre_map = _precompute_polygons(rings_map)  # once per task (§4.5)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
+        for batch in _coalesce_batches(batches):
             lon = batch.column("lon").to_numpy(zero_copy_only=False)
             lat = batch.column("lat").to_numpy(zero_copy_only=False)
             tids = batch.column("tile_id").to_numpy(zero_copy_only=False).astype(np.int64)
@@ -250,10 +284,20 @@ def _candidates(spark: SparkSession, pages: DataFrame, features: DataFrame, zoom
     set kills every point whose cell can't contain a feature BEFORE any
     shuffle or Arrow transfer. At web scale most points are elsewhere
     (the world is sparse), so this is the single biggest data-volume cut
-    in the plan, kept inside whole-stage codegen."""
+    in the plan, kept inside whole-stage codegen.
+
+    The semi-join's build side is made from a ``pyarrow.Table``, which
+    plans a ``LocalTableScan``: the tile ids travel inside the plan and the
+    broadcast is built in the JVM. A list of tuples (or a pandas frame
+    with Arrow off) plans ``Scan ExistingRDD`` instead, and the broadcast
+    is then built by running a job over a pickled Python RDD (measured:
+    geotag plus semi-join count 0.684 s that way, 0.391 s this way, 0.312 s
+    for geotag alone)."""
     tile_map, rings_map = _collect_feature_index(features, zoom)
     bc = spark.sparkContext.broadcast((tile_map, rings_map))
-    cover_tiles = spark.createDataFrame([(int(t),) for t in tile_map], "tile_id LONG")
+    cover_tiles = spark.createDataFrame(
+        pa.table({"tile_id": pa.array(list(tile_map), type=pa.int64())})
+    )
     pts = geotagged_points(pages, zoom).join(F.broadcast(cover_tiles), "tile_id", "left_semi")
     return bc, pts
 

@@ -12,6 +12,7 @@ known IoU values (for dedupe thresholds).
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -69,6 +70,18 @@ FEATURE_SCHEMA = StructType(
         StructField("props", MapType(StringType(), StringType()), False),
     ]
 )
+
+
+def _feature_frame(spark: SparkSession, rows) -> DataFrame:
+    """``FEATURE_SCHEMA`` row tuples -> DataFrame. Built from a
+    ``pyarrow.Table`` so it plans a ``LocalTableScan``; a list of tuples
+    plans ``Scan ExistingRDD``, a pickled Python RDD that every job over
+    the table reads back through a Python worker."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(FEATURE_SCHEMA)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
+    return spark.createDataFrame(table, FEATURE_SCHEMA)
 
 
 def _rect(lon0, lat0, w, h):
@@ -143,7 +156,7 @@ def build_feature_rows():
 
 
 def features(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(build_feature_rows(), FEATURE_SCHEMA)
+    return _feature_frame(spark, build_feature_rows())
 
 
 def dense_polygon_features(
@@ -177,7 +190,7 @@ def dense_polygon_features(
             (1000 + k, "Polygon", 1000 + k, [[list(map(float, p)) for p in ring]],
              bbox, {"src": "dense"})
         )
-    return spark.createDataFrame(rows, FEATURE_SCHEMA)
+    return _feature_frame(spark, rows)
 
 
 def tiles(spark: SparkSession, which: str = "parking") -> DataFrame:

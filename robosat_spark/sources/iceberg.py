@@ -1490,6 +1490,7 @@ def scan_manifests_distributed(spark, manifest_paths: list[str]):
     driver never holds all entries — at 10^12-row scale the file list
     itself is a DataFrame to aggregate/join, not a collect."""
     import pandas as pd
+    import pyarrow as pa
 
     def gen(batches):
         for pdf in batches:
@@ -1512,7 +1513,10 @@ def scan_manifests_distributed(spark, manifest_paths: list[str]):
                          "file_size_in_bytes", "partition_json"],
             )
 
-    paths = spark.createDataFrame([(p,) for p in manifest_paths], "manifest_path STRING")
+    # an Arrow table plans a LocalTableScan, not a Scan ExistingRDD
+    paths = spark.createDataFrame(
+        pa.table({"manifest_path": pa.array(list(manifest_paths), pa.string())})
+    )
     return paths.repartition(max(1, min(len(manifest_paths), 64))).mapInPandas(
         gen,
         "manifest_path STRING, file_path STRING, record_count LONG, "

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .fixtures import FEATURE_SCHEMA, _rect
+from .fixtures import _feature_frame, _rect
 
 # (feature_id, x0, y0, x1, y1) over the derived-point domain
 # lon in [-180, 180), lat in [-80, 80)
@@ -28,7 +28,7 @@ def oracle_rect_features(spark: SparkSession) -> DataFrame:
         rows.append(
             (fid, "Polygon", fid, [ring], (x0, y0, x1, y1), {"src": "oracle-rect"})
         )
-    return spark.createDataFrame(rows, FEATURE_SCHEMA)
+    return _feature_frame(spark, rows)
 
 
 def rect_centroids_vertexmean():
