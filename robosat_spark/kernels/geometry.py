@@ -344,59 +344,71 @@ def convex_iou(ring_a, ring_b) -> float:
     return float(min(max(iou, 0.0), 1.0))
 
 
-def _point_in_tri_inclusive(p, a, b, c) -> bool:
-    """Barycentric-sign containment, edges inclusive (used to BLOCK ears,
-    so on-edge counts as inside)."""
-    d1 = (p[0] - b[0]) * (a[1] - b[1]) - (a[0] - b[0]) * (p[1] - b[1])
-    d2 = (p[0] - c[0]) * (b[1] - c[1]) - (b[0] - c[0]) * (p[1] - c[1])
-    d3 = (p[0] - a[0]) * (c[1] - a[1]) - (c[0] - a[0]) * (p[1] - a[1])
-    has_neg = (d1 < 0) or (d2 < 0) or (d3 < 0)
-    has_pos = (d1 > 0) or (d2 > 0) or (d3 > 0)
-    return not (has_neg and has_pos)
-
-
 def triangulate(ring) -> list | None:
     """Ear-clipping triangulation of a SIMPLE ring (no self-intersection;
     concave fine) -> list of (3, 2) triangle arrays partitioning the
     polygon, or None if the clipper deadlocks on a degenerate input
-    (caller falls back to the raster path). O(n²) — rings here are
-    simplified contours, tens of vertices."""
-    r = orient(open_ring(as_ring(ring)), ccw=True)
-    if len(r) < 3:
+    (caller falls back to the raster path). Each step clips the first ear
+    in ring order: a convex corner whose triangle holds no other remaining
+    vertex (edges inclusive), tested for a block of corners at once."""
+    p = orient(open_ring(as_ring(ring)), ccw=True)
+    if len(p) < 3:
         return None
-    idx = list(range(len(r)))
     tris = []
-    while len(idx) > 3:
-        n = len(idx)
-        for ii in range(n):
-            i0, i1, i2 = idx[(ii - 1) % n], idx[ii], idx[(ii + 1) % n]
-            a, b, c = r[i0], r[i1], r[i2]
-            cross = (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])
-            if cross <= 0.0:  # reflex or collinear corner: not an ear
-                continue
-            if any(
-                _point_in_tri_inclusive(r[j], a, b, c)
-                for j in idx
-                if j not in (i0, i1, i2)
-            ):
-                continue
-            tris.append(np.array([a, b, c]))
-            idx.pop(ii)
-            break
-        else:
+    while len(p) > 3:
+        ear = _first_ear(p)
+        if ear is None:
             return None  # no ear found: degenerate geometry
-    tris.append(r[idx])
+        tris.append(p[[ear - 1, ear, (ear + 1) % len(p)]])
+        p = np.delete(p, ear, axis=0)
+    tris.append(p)
     return tris
+
+
+# ring-position offsets of an ear's edge starts (b, c, a) and ends (a, b, c)
+# from its corner b, for the barycentric edges b->a, c->b, a->c
+_EAR_EDGES = np.array([[0, 1, -1], [-1, 0, 1]])[:, :, None]
+
+
+def _first_ear(p: np.ndarray) -> int | None:
+    """Position of the first ear corner of the (n, 2) ring ``p``, or None.
+    Corners are tested in blocks that double in size: the first corner is
+    usually an ear, and each test costs O(block x n)."""
+    n = len(p)
+    x, y = p[:, 0], p[:, 1]
+    s, block = 0, 1
+    while s < n:
+        k = np.arange(s, min(s + block, n))
+        s, block = s + block, 2 * block
+        at = (k + _EAR_EDGES) % n
+        u, v = p[at]  # (3, corners, 2) each
+        a, b, c = v
+        cross = (b[:, 0] - a[:, 0]) * (c[:, 1] - a[:, 1]) - (b[:, 1] - a[:, 1]) * (c[:, 0] - a[:, 0])
+        convex = cross > 0.0
+        if not convex.any():  # reflex or collinear corners are no ears
+            continue
+        # barycentric sign of every vertex against each edge of each
+        # candidate; on an edge counts as inside, so it blocks
+        ux, uy, vx, vy = u[..., 0, None], u[..., 1, None], v[..., 0, None], v[..., 1, None]
+        d = (x - ux) * (vy - uy) - (vx - ux) * (y - uy)
+        blocked = ~((d < 0).any(axis=0) & (d > 0).any(axis=0))
+        blocked[np.arange(len(k)), at[1]] = False  # its own three corners
+        ear = convex & ~blocked.any(axis=1)
+        if ear.any():
+            return int(k[ear.argmax()])
+    return None
 
 
 def intersection_area(ring_a, ring_b) -> float | None:
     """EXACT area of the intersection of two SIMPLE rings (either may be
-    concave): triangulate B into a partition, clip A by each (convex)
-    triangle with Sutherland-Hodgman, sum the clipped areas. Exact
-    arithmetic — the partition makes per-triangle intersections disjoint,
-    and a convex clipper keeps SH exact even for a concave subject.
-    Returns None when triangulation deadlocks (caller falls back to
-    raster)."""
+    concave): triangulate B into a partition and clip A by all T (convex)
+    triangles together, Sutherland-Hodgman on a padded (T, M, 2) array
+    (three half-plane steps, each compacting the surviving points in
+    order), then sum the clipped areas. Exact arithmetic: the partition
+    makes the per-triangle intersections disjoint, and a convex clipper
+    keeps SH exact even for a concave subject. Each triangle's points are
+    those :func:`clip_convex` gives. Returns None when triangulation
+    deadlocks (caller falls back to raster)."""
     a = orient(open_ring(as_ring(ring_a)), ccw=True)
     b = open_ring(as_ring(ring_b))
     if len(a) < 3 or len(b) < 3:
@@ -404,12 +416,47 @@ def intersection_area(ring_a, ring_b) -> float | None:
     tris = triangulate(b)
     if tris is None:
         return None
-    total = 0.0
-    for tri in tris:
-        out = clip_convex(a, tri)
-        if len(out) >= 3:
-            total += max(signed_area(out), 0.0)
-    return total
+    a = open_ring(a)  # as clip_convex takes its subject
+    tri = np.stack(tris)
+    # clip_convex orients each clipper counter-clockwise
+    x, y = tri[:, :, 0], tri[:, :, 1]
+    cw = (x * np.roll(y, -1, axis=1) - np.roll(x, -1, axis=1) * y).sum(axis=1) <= 0.0
+    tri[cw] = tri[cw, ::-1]
+    pts = np.broadcast_to(a, (len(tri), len(a), 2))
+    cnt = np.full(len(tri), len(a))
+    for e in range(3):
+        pts, cnt = _clip_half_plane(pts, cnt, tri[:, e], tri[:, (e + 1) % 3])
+    m = np.arange(pts.shape[1])
+    nxt = np.where(m + 1 < cnt[:, None], m + 1, 0)
+    x, y = pts[:, :, 0], pts[:, :, 1]
+    xn, yn = np.take_along_axis(x, nxt, axis=1), np.take_along_axis(y, nxt, axis=1)
+    area = 0.5 * np.where(m < cnt[:, None], x * yn - xn * y, 0.0).sum(axis=1)
+    return float(np.maximum(area[cnt >= 3], 0.0).sum())
+
+
+def _clip_half_plane(pts, cnt, a, b):
+    """One Sutherland-Hodgman step for T polygons at once: keep the part of
+    polygon t (its first ``cnt[t]`` points of ``pts``, (T, M, 2)) left of
+    the directed line a[t] -> b[t]. -> (points, counts), same layout."""
+    t_n, m_n = cnt.shape[0], pts.shape[1]
+    m = np.arange(m_n)
+    live = m < cnt[:, None]
+    prev_i = np.where(m > 0, m - 1, cnt[:, None] - 1).clip(0)
+    edge = b - a
+    side = edge[:, 0:1] * (pts[:, :, 1] - a[:, 1:2]) - edge[:, 1:2] * (pts[:, :, 0] - a[:, 0:1])
+    side_prev = np.take_along_axis(side, prev_i, axis=1)
+    prev = np.take_along_axis(pts, prev_i[:, :, None], axis=1)
+    cur_in, prev_in = side >= 0, side_prev >= 0
+    denom = side - side_prev
+    with np.errstate(divide="ignore", invalid="ignore"):
+        t = np.where(np.abs(denom) > 1e-300, -side_prev / denom, 0.0)
+    cross_pt = prev + t[:, :, None] * (pts - prev)
+    # per input point: the edge crossing into/out of the plane, then the point
+    out = np.stack([cross_pt, pts], axis=2).reshape(t_n, 2 * m_n, 2)
+    keep = np.stack([(cur_in != prev_in) & live, cur_in & live], axis=2).reshape(t_n, 2 * m_n)
+    cnt = keep.sum(axis=1)
+    order = np.argsort(~keep, axis=1, kind="stable")[:, : max(int(cnt.max()), 1)]
+    return np.take_along_axis(out, order[:, :, None], axis=1), cnt
 
 
 def exact_iou(rings_a, rings_b) -> float | None:

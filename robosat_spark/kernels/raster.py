@@ -23,9 +23,8 @@ def rasterize_rings(rings, width: int, height: int, transform) -> np.ndarray:
 
     ``transform`` maps world (x, y) -> pixel (col_f, row_f); a pixel is set
     when its center lies inside (rasterio all_touched=False default, which
-    is what the reference's burn uses). Vectorized per row-chunk.
-    """
-    out = np.zeros((height, width), dtype=np.uint8)
+    is what the reference's burn uses). Holes toggle off because the edges
+    of every ring feed one even-odd fill (:func:`_even_odd_fill`)."""
     polys = []
     for ring in rings:
         r = open_ring(np.asarray(ring, dtype=np.float64))
@@ -33,50 +32,49 @@ def rasterize_rings(rings, width: int, height: int, transform) -> np.ndarray:
             continue
         cx, cy = transform(r[:, 0], r[:, 1])
         polys.append(np.column_stack([cx, cy]))
-    if not polys:
-        return out
     cols = np.arange(width, dtype=np.float64) + 0.5
-    chunk = max(1, int(2_000_000 // max(width, 1)))
-    for r0 in range(0, height, chunk):
-        r1 = min(height, r0 + chunk)
-        rows = np.arange(r0, r1, dtype=np.float64) + 0.5
-        gx, gy = np.meshgrid(cols, rows)
-        gx, gy = gx.ravel(), gy.ravel()
-        inside = np.zeros(gx.shape[0], dtype=bool)
-        for p in polys:
-            inside ^= _pip_flat(gx, gy, p)  # even-odd: holes toggle off
-        out[r0:r1, :] = inside.reshape(r1 - r0, width).astype(np.uint8)
-    return out
+    rows = np.arange(height, dtype=np.float64) + 0.5
+    return _even_odd_fill(polys, cols, rows).view(np.uint8)
 
 
-def _pip_flat(px, py, ring):
-    x1, y1 = ring[:, 0], ring[:, 1]
-    x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
-    dy = y2 - y1
-    valid = dy != 0  # horizontal edges never straddle a scan level
-    a, b = x1[valid], y1[valid]
-    c, d = x2[valid], y2[valid]
-    if a.size == 0:
-        return np.zeros(px.shape[0], dtype=bool)
-    # broadcast fully over (edges x points) when the temporary is small —
-    # the cover path probes a handful of tile centers against dense rings,
-    # where the old per-edge loop spent more time in np.errstate context
-    # management than arithmetic (r7; bitwise XOR is commutative, so the
-    # reduce order change cannot alter the parity result)
-    if a.size * px.shape[0] <= 2_000_000:
-        PY, PX = py[None, :], px[None, :]
-        straddle = (b[:, None] > PY) != (d[:, None] > PY)
+def _even_odd_fill(polys, cols: np.ndarray, rows: np.ndarray) -> np.ndarray:
+    """(len(rows), len(cols)) bool grid: is sample (cols[j], rows[i])
+    inside the even-odd union of the (N, 2) rings ``polys``? ``cols``
+    ascends.
+
+    Scanline form of the crossing-number test: a sample toggles once for
+    every edge that straddles its row (``(b > py) != (d > py)``) and
+    crosses it to the right (``px < xint``). Per (row, edge) the crossing
+    ``xint`` is computed with the per-sample formula, the first column
+    with ``px >= xint`` comes from ``searchsorted``, and an XOR
+    accumulate along the row turns the toggles into the fill, so the
+    result is bit-identical to testing every sample against every edge."""
+    out = np.zeros((len(rows), len(cols)), dtype=bool)
+    edges = [np.zeros((0, 4))]
+    for p in polys:
+        x1, y1 = p[:, 0], p[:, 1]
+        x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
+        valid = y2 != y1  # horizontal edges never straddle a scan level
+        edges.append(np.column_stack([x1[valid], y1[valid], x2[valid], y2[valid]]))
+    a, b, c, d = np.concatenate(edges).T
+    w = len(cols)
+    if a.size == 0 or w == 0:
+        return out
+    chunk = max(1, 2_000_000 // a.size)  # bound the (rows x edges) temporaries
+    for r0 in range(0, len(rows), chunk):
+        py = rows[r0 : r0 + chunk, None]
+        straddle = (b > py) != (d > py)
+        ri, ei = np.nonzero(straddle)
         with np.errstate(divide="ignore", invalid="ignore"):
-            xint = a[:, None] + (PY - b[:, None]) * (c - a)[:, None] / (d - b)[:, None]
-        return np.bitwise_xor.reduce(straddle & (PX < xint), axis=0)
-    # large grids (rasterize path): loop over edges, vectorize over points
-    inside = np.zeros(px.shape[0], dtype=bool)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        for i in range(a.shape[0]):
-            straddle = (b[i] > py) != (d[i] > py)
-            xint = a[i] + (py - b[i]) * (c[i] - a[i]) / (d[i] - b[i])
-            inside ^= straddle & (px < xint)
-    return inside
+            xint = a[ei] + (py[ri, 0] - b[ei]) * (c[ei] - a[ei]) / (d[ei] - b[ei])
+        hit = ~np.isnan(xint)  # px < NaN is false: no toggle
+        ri, k = ri[hit], np.searchsorted(cols, xint[hit], "left")
+        # edge toggles columns [0, k): flip at 0 and at k, then XOR-scan
+        n = len(py)
+        toggles = np.bincount(ri * (w + 1) + k, minlength=n * (w + 1)).reshape(n, w + 1)
+        toggles[:, 0] += np.bincount(ri, minlength=n)
+        out[r0 : r0 + n] = np.bitwise_xor.accumulate(toggles[:, :w] & 1, axis=1).astype(bool)
+    return out
 
 
 def disk_offsets(size: int) -> np.ndarray:
@@ -156,10 +154,24 @@ def find_contours(mask: np.ndarray):
     ``{"parent": idx|-1, "is_hole": bool}``. Outer borders of connected
     components and hole borders are both traced; nesting gives the tree the
     parking handler walks (/root/reference/robosat/features/core.py:95-153).
+
+    Suzuki-Abe's raster scan visits, in raster order, only the nonzero
+    pixels with a zero among their 8 neighbours. The scan is still exact:
+    a pixel whose 8 neighbours are all nonzero has nonzero left and right
+    neighbours, so it starts no border, and the border follower only
+    stands on pixels next to the zero region it circles, so it keeps the
+    value 1 and never changes LNBD. Zeros are never relabelled, so the set
+    is found once, up front.
     """
     h, w = mask.shape
     f = np.zeros((h + 2, w + 2), dtype=np.int32)
     f[1:-1, 1:-1] = (np.asarray(mask) != 0).astype(np.int32)
+
+    nz = f != 0
+    interior = np.ones((h, w), dtype=bool)
+    for di, dj in _NBR:
+        interior &= nz[1 + di : h + 1 + di, 1 + dj : w + 1 + dj]
+    scan_i, scan_j = np.nonzero(nz[1:-1, 1:-1] & ~interior)
 
     contours = []
     info = []  # per NBD (from 2): {"is_hole", "parent_nbd"}
@@ -167,41 +179,39 @@ def find_contours(mask: np.ndarray):
     nbd_is_hole = {1: True}
     nbd_parent = {1: 0}
 
-    for i in range(1, h + 1):
-        lnbd = 1
-        row = f[i]
-        for j in range(1, w + 1):
-            fij = row[j]
-            if fij == 0:
-                continue
-            outer = fij == 1 and row[j - 1] == 0
-            hole = fij >= 1 and row[j + 1] == 0
-            if outer or hole:
-                nbd += 1
-                if hole:
-                    start_dir = 0  # neighbor to the right
-                    if fij > 1:
-                        lnbd = fij
-                else:
-                    start_dir = 4  # neighbor to the left
-                is_hole = hole
-                # parent from LNBD per Suzuki-Abe table 1
-                if nbd_is_hole[lnbd] == is_hole:
-                    parent = nbd_parent[lnbd]
-                else:
-                    parent = lnbd
-                nbd_is_hole[nbd] = is_hole
-                nbd_parent[nbd] = parent
+    i = 0
+    for si, j in zip((scan_i + 1).tolist(), (scan_j + 1).tolist()):
+        if si != i:  # LNBD restarts on each row
+            i, lnbd, row = si, 1, f[si]
+        fij = row[j]
+        outer = fij == 1 and row[j - 1] == 0
+        hole = fij >= 1 and row[j + 1] == 0
+        if outer or hole:
+            nbd += 1
+            if hole:
+                start_dir = 0  # neighbor to the right
+                if fij > 1:
+                    lnbd = fij
+            else:
+                start_dir = 4  # neighbor to the left
+            is_hole = hole
+            # parent from LNBD per Suzuki-Abe table 1
+            if nbd_is_hole[lnbd] == is_hole:
+                parent = nbd_parent[lnbd]
+            else:
+                parent = lnbd
+            nbd_is_hole[nbd] = is_hole
+            nbd_parent[nbd] = parent
 
-                pts = _follow_border(f, i, j, start_dir, nbd)
-                contours.append(pts)
-                # Suzuki-Abe step 1: the outer test wins, so a one-pixel
-                # apex start is an outer border (the NBD bookkeeping above
-                # still files it as a hole; the pinned raster digest
-                # depends on the parents that gives)
-                info.append({"parent": parent, "is_hole": is_hole and not outer})
-            if row[j] != 1:
-                lnbd = abs(row[j])
+            pts = _follow_border(f, i, j, start_dir, nbd)
+            contours.append(pts)
+            # Suzuki-Abe step 1: the outer test wins, so a one-pixel
+            # apex start is an outer border (the NBD bookkeeping above
+            # still files it as a hole; the pinned raster digest
+            # depends on the parents that gives)
+            info.append({"parent": parent, "is_hole": is_hole and not outer})
+        if row[j] != 1:
+            lnbd = abs(row[j])
 
     # remap parent NBD ids (2-based) to contour list indices; frame -> -1
     out_h = []
@@ -326,13 +336,8 @@ def cover_rings(rings, zoom: int) -> np.ndarray:
     if x1 >= x0 and y1 >= y0:
         cx = np.arange(x0, x1 + 1, dtype=np.float64) + 0.5
         cy = np.arange(y0, y1 + 1, dtype=np.float64) + 0.5
-        gx, gy = np.meshgrid(cx, cy)
-        gx, gy = gx.ravel(), gy.ravel()
-        inside = np.zeros(gx.shape[0], dtype=bool)
-        for p in polys:
-            inside ^= _pip_flat(gx, gy, p)
-        for xi, yi in zip(gx[inside].astype(np.int64), gy[inside].astype(np.int64)):
-            inner.add((int(xi), int(yi)))
+        iy, ix = np.nonzero(_even_odd_fill(polys, cx, cy))
+        inner.update(zip((ix + x0).tolist(), (iy + y0).tolist()))
     tiles = sorted(edge_tiles | inner)
     return np.asarray(tiles, dtype=np.int64).reshape(-1, 2)
 

@@ -64,6 +64,28 @@ def _cover_cells(features: DataFrame, id_col: str, cell_zoom: int) -> DataFrame:
     ).select(id_col, "cx", F.explode(F.sequence("ty0", "ty1")).alias("cy"))
 
 
+def judge_polygon(pred_rings, cands, threshold: float = 0.5, iou_resolution: int = 256):
+    """One predicted polygon against its bbox candidates (each a list of
+    rings) -> (iou, keep); the dedupe cascade, no Spark needed."""
+    if not cands:  # no bbox candidates -> keep (dedupe.py:51-52)
+        return 0.0, True
+    intersecting = [rings for rings in cands if G.rings_intersect(pred_rings[0], rings[0])]
+    if not intersecting:  # none intersect -> keep (dedupe.py:58-59)
+        return 0.0, True
+    iou = None
+    if len(intersecting) == 1:
+        # exact clipping IoU (triangulate + convex clip; concave and
+        # holed polygons included) — no quantization at the keep/drop
+        # threshold; None on degenerate triangulation -> raster
+        iou = G.exact_iou(pred_rings, intersecting[0])
+    if iou is None:
+        # multi-candidate unions (overlap inclusion-exclusion across
+        # candidates is not worth exactness) and degenerate rings take
+        # the supersampled raster path
+        iou = G.raster_iou_multi([pred_rings], intersecting, resolution=iou_resolution)
+    return iou, iou < threshold
+
+
 def dedupe(
     spark: SparkSession,
     predicted: DataFrame,
@@ -92,14 +114,6 @@ def dedupe(
     cand = pairs.join(pred_payload, "pred_id").join(osm_payload, "osm_id", "left_outer")
 
     def judge(key, table):
-        pid = key[0].as_py()
-
-        def verdict(iou, n, keep):
-            return pa.table({
-                "pred_id": pa.array([pid], pa.int64()), "iou": pa.array([float(iou)], pa.float64()),
-                "n_candidates": pa.array([n], pa.int32()), "keep": pa.array([bool(keep)], pa.bool_()),
-            })
-
         pred_rings = G.rings_from_arrow(table.column("pred_rings").slice(0, 1))[0]
         cands = [
             rings
@@ -107,25 +121,13 @@ def dedupe(
                                 G.rings_from_arrow(table.column("osm_rings")))
             if o is not None
         ]
-        if not cands:  # no bbox candidates -> keep (dedupe.py:51-52)
-            return verdict(0.0, 0, True)
-        intersecting = [
-            rings for rings in cands if G.rings_intersect(pred_rings[0], rings[0])
-        ]
-        if not intersecting:  # none intersect -> keep (dedupe.py:58-59)
-            return verdict(0.0, len(cands), True)
-        iou = None
-        if len(intersecting) == 1:
-            # exact clipping IoU (triangulate + convex clip; concave and
-            # holed polygons included) — no quantization at the keep/drop
-            # threshold; None on degenerate triangulation -> raster
-            iou = G.exact_iou(pred_rings, intersecting[0])
-        if iou is None:
-            # multi-candidate unions (overlap inclusion-exclusion across
-            # candidates is not worth exactness) and degenerate rings take
-            # the supersampled raster path
-            iou = G.raster_iou_multi([pred_rings], intersecting, resolution=iou_resolution)
-        return verdict(iou, len(cands), iou < threshold)
+        iou, keep = judge_polygon(pred_rings, cands, threshold, iou_resolution)
+        return pa.table({
+            "pred_id": pa.array([key[0].as_py()], pa.int64()),
+            "iou": pa.array([float(iou)], pa.float64()),
+            "n_candidates": pa.array([len(cands)], pa.int32()),
+            "keep": pa.array([bool(keep)], pa.bool_()),
+        })
 
     return cand.groupBy("pred_id").applyInArrow(judge, DEDUP_SCHEMA)
 

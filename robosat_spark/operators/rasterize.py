@@ -121,14 +121,21 @@ def rasterize_masks(
 
     def burn(key, table):
         x, y = key[0].as_py(), key[1].as_py()
-        t = tile_transform(x, y, zoom, size)
-        canvas = np.zeros((size, size), dtype=np.uint8)
-        for rings in rings_from_arrow(table.column("rings")):
-            if rings is not None:  # the uncovered tile's null row
-                np.maximum(canvas, rasterize_rings(rings, size, size, t), out=canvas)  # A6
+        polys = [r for r in rings_from_arrow(table.column("rings")) if r is not None]
+        canvas = burn_tile(polys, x, y, zoom, size)  # no polygons: the uncovered tile
         return pa.Table.from_batches([encode_masks([(zoom, x, y, canvas)])])
 
     return joined.groupBy("x", "y").applyInArrow(burn, MASK_SCHEMA)
+
+
+def burn_tile(polys, x: int, y: int, zoom: int, size: int) -> np.ndarray:
+    """Polygons (each a list of rings) -> tile (x, y)'s (size, size) uint8
+    mask, every polygon burnt onto one canvas (max-merge, A6)."""
+    t = tile_transform(x, y, zoom, size)
+    canvas = np.zeros((size, size), dtype=np.uint8)
+    for rings in polys:
+        np.maximum(canvas, rasterize_rings(rings, size, size, t), out=canvas)
+    return canvas
 
 
 def quantize_probs(prob: np.ndarray) -> np.ndarray:
@@ -150,13 +157,15 @@ def synthesize_probs(masks: DataFrame, noise: float = 0.02) -> DataFrame:
     """Deterministic predict substitute: mask burn -> fg prob 0.9/0.1 with
     seeded salt-and-pepper noise -> quantized uint8 (P1)."""
 
-    def predict(z, x, y, grid):
-        rng = np.random.RandomState((x * 73856093 ^ y * 19349663) % (2**31))
-        prob = np.where(grid > 0, 0.9, 0.1)
-        flip = rng.rand(*grid.shape) < noise
-        return z, x, y, quantize_probs(np.where(flip, 1.0 - prob, prob))
+    return map_masks(masks, lambda z, x, y, grid: (z, x, y, synthesize_tile_probs(x, y, grid, noise)))
 
-    return map_masks(masks, predict)
+
+def synthesize_tile_probs(x: int, y: int, grid: np.ndarray, noise: float = 0.02) -> np.ndarray:
+    """One tile's burn -> its quantized fg probabilities (seeded by x, y)."""
+    rng = np.random.RandomState((x * 73856093 ^ y * 19349663) % (2**31))
+    prob = np.where(grid > 0, 0.9, 0.1)
+    flip = rng.rand(*grid.shape) < noise
+    return quantize_probs(np.where(flip, 1.0 - prob, prob))
 
 
 def probs_to_masks(probs: DataFrame) -> DataFrame:
@@ -164,7 +173,12 @@ def probs_to_masks(probs: DataFrame) -> DataFrame:
     -> argmax over (bg, fg), i.e. fg > 0.5. Multi-model soft voting lives
     in ``operators.ensemble``."""
 
-    return map_masks(probs, lambda z, x, y, q: (z, x, y, np.argmax(unquantize_probs(q), axis=0)))
+    return map_masks(probs, lambda z, x, y, q: (z, x, y, probs_to_mask(q)))
+
+
+def probs_to_mask(q: np.ndarray) -> np.ndarray:
+    """One tile's quantized probabilities -> its (h, w) 0/1 mask."""
+    return np.argmax(unquantize_probs(q), axis=0)
 
 
 def mask_nonzero_pct(masks: DataFrame) -> DataFrame:

@@ -171,6 +171,13 @@ def dense_polygon_features(
     polygons at web scale have hundreds of vertices, so the PIP refine is
     compute-dense (O(vertices) per candidate), unlike the 5-point oracle
     rects. Used by the scaling benchmark."""
+    return _feature_frame(spark, dense_polygon_rows(n, vertices, grid, radius))
+
+
+def dense_polygon_rows(
+    n: int = 400, vertices: int = 128, grid: int = 20, radius: float = 0.0011
+) -> list:
+    """``FEATURE_SCHEMA`` row tuples of :func:`dense_polygon_features`."""
     rows = []
     lon_span = (LON1_B := -82.80) - (LON0_B := -82.84)
     lat_span = (LAT1_B := 34.69) - (LAT0_B := 34.66)
@@ -190,7 +197,7 @@ def dense_polygon_features(
             (1000 + k, "Polygon", 1000 + k, [[list(map(float, p)) for p in ring]],
              bbox, {"src": "dense"})
         )
-    return _feature_frame(spark, rows)
+    return rows
 
 
 def tiles(spark: SparkSession, which: str = "parking") -> DataFrame:
