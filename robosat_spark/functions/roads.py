@@ -6,8 +6,7 @@ Reference semantics (/root/reference/robosat/osm/road.py:100-138):
   ``oneway=no``); an explicit parseable ``lanes`` tag REPLACES that count
   (clamped to >= 1); unparseable tags fall back (the try/except);
 - width = left_shoulder + lane_width * lanes + right_shoulder; an explicit
-  parseable ``width`` tag replaces it (clamped to >= 1.0 m);
-- the buffer radius for line->polygon is degrees(width / 2 / R_mean).
+  parseable ``width`` tag replaces it (clamped to >= 1.0 m).
 
 All pure Column expressions — ``try_cast`` reproduces the try/except
 fallbacks; the attribute table (data from road.py:15-91) folds to literals.
@@ -15,12 +14,8 @@ fallbacks; the attribute table (data from road.py:15-91) folds to literals.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-EARTH_MEAN_RADIUS = 6371004.0
 
 # (lanes, lane_width, left_shoulder, right_shoulder) — data table from the
 # reference, /root/reference/robosat/osm/road.py:15-91
@@ -81,7 +76,3 @@ def road_width_m(
         F.greatest(width_parsed, F.lit(1.0)),
     ).otherwise(computed)
 
-
-def buffer_radius_deg(width_m: Column) -> Column:
-    """Degrees buffer radius: degrees(width / 2 / R) (road.py:140-142)."""
-    return width_m / F.lit(2.0) / F.lit(EARTH_MEAN_RADIUS) * F.lit(180.0 / math.pi)

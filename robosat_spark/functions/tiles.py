@@ -59,27 +59,12 @@ def pack_tile_id(z, x: Column, y: Column) -> Column:
     )
 
 
-def unpack_tile_z(tile_id: Column) -> Column:
-    return F.shiftright(tile_id, 58)
-
-
 def unpack_tile_x(tile_id: Column) -> Column:
     return F.shiftright(tile_id, 29).bitwiseAND(F.lit((1 << 29) - 1))
 
 
 def unpack_tile_y(tile_id: Column) -> Column:
     return tile_id.bitwiseAND(F.lit((1 << 29) - 1))
-
-
-def tile_lon_w(x: Column, zoom: int) -> Column:
-    """West edge longitude of tile x at zoom."""
-    return x.cast("double") / F.lit(float(2**zoom)) * F.lit(360.0) - F.lit(180.0)
-
-
-def tile_lat_n(y: Column, zoom: int) -> Column:
-    """North edge latitude of tile y at zoom."""
-    n = F.lit(float(2**zoom))
-    return F.degrees(F.atan(F.sinh(F.lit(3.141592653589793) * (F.lit(1.0) - F.lit(2.0) * y.cast("double") / n))))
 
 
 def quadkey(x: Column, y: Column, zoom: int) -> Column:

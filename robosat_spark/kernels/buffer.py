@@ -18,28 +18,8 @@ from __future__ import annotations
 
 import numpy as np
 
-from .geometry import as_ring, close_ring, is_convex, open_ring, orient, simplify_dp
+from .geometry import as_ring, clip_half_plane, close_ring, is_convex, open_ring, orient, simplify_dp
 from .raster import find_contours, rasterize_rings, dilate, erode
-
-
-def _clip_halfplane(poly: np.ndarray, a: np.ndarray, e: np.ndarray) -> np.ndarray:
-    """Clip an open ring by the half-plane LEFT of the directed line
-    through ``a`` along ``e`` (Sutherland-Hodgman single edge)."""
-    if len(poly) == 0:
-        return poly
-    prev = np.roll(poly, 1, axis=0)
-    side = e[0] * (poly[:, 1] - a[1]) - e[1] * (poly[:, 0] - a[0])
-    side_prev = e[0] * (prev[:, 1] - a[1]) - e[1] * (prev[:, 0] - a[0])
-    out = []
-    for j in range(len(poly)):
-        cur_in, was_in = side[j] >= 0, side_prev[j] >= 0
-        if cur_in != was_in:
-            denom = side[j] - side_prev[j]
-            t = -side_prev[j] / denom if abs(denom) > 1e-300 else 0.0
-            out.append(prev[j] + t * (poly[j] - prev[j]))
-        if cur_in:
-            out.append(poly[j])
-    return np.asarray(out, dtype=np.float64).reshape(-1, 2)
 
 
 def buffer_ring_exact(ring, dist: float, segments_per_arc: int = 16):
@@ -55,19 +35,17 @@ def buffer_ring_exact(ring, dist: float, segments_per_arc: int = 16):
     if len(r) < 3:
         return []
     if dist < 0:
-        out = r
-        n = len(r)
-        for i in range(n):
-            a, b = r[i], r[(i + 1) % n]
+        pts, cnt = r[None], np.array([len(r)])
+        for a, b in zip(r, np.roll(r, -1, axis=0)):
             e = b - a
             length = float(np.hypot(e[0], e[1]))
             if length < 1e-15:
                 continue
             inward = np.array([-e[1], e[0]]) / length  # left normal of CCW edge
-            out = _clip_halfplane(out, a + inward * (-dist), e)
-            if len(out) < 3:
+            pts, cnt = clip_half_plane(pts, cnt, (a + inward * (-dist))[None], e[None])
+            if cnt[0] < 3:
                 return []
-        return [close_ring(out)]
+        return [close_ring(pts[0, : cnt[0]])]
 
     n = len(r)
     edges = np.roll(r, -1, axis=0) - r

@@ -10,6 +10,12 @@ From-scratch NumPy replacements for the shapely/cv2 calls in the reference:
   * polygon clip + IoU           <- shapely ``intersection/union`` through an
     equal-area projection (/root/reference/robosat/spatial/core.py:56-77)
 
+Clipping is one batched Sutherland-Hodgman step, ``clip_half_plane``, under
+``clip_convex``, ``intersection_area`` and the convex buffer. IoU is the
+exact ``exact_iou`` with the supersampled ``raster_iou_multi`` as its
+fallback; both, and ``polygon_area_m2``, project through one Mollweide
+ring projector.
+
 A polygon here is an (N, 2) float64 ndarray of vertices; rings may be open
 or closed (first==last) — functions normalize as needed. A polygon-with-
 holes is a list of rings, ring 0 exterior.
@@ -264,34 +270,42 @@ def rings_intersect(a: np.ndarray, b: np.ndarray) -> bool:
     return False
 
 
+def clip_half_plane(pts, cnt, a, edge):
+    """One Sutherland-Hodgman step for T polygons at once: keep the part of
+    polygon t (its first ``cnt[t]`` points of ``pts``, (T, M, 2)) left of
+    the directed line through a[t] along edge[t]. -> (points, counts),
+    same layout. The engine's one half-plane clip."""
+    t_n, m_n = cnt.shape[0], pts.shape[1]
+    m = np.arange(m_n)
+    live = m < cnt[:, None]
+    prev_i = np.where(m > 0, m - 1, cnt[:, None] - 1).clip(0)
+    side = edge[:, 0:1] * (pts[:, :, 1] - a[:, 1:2]) - edge[:, 1:2] * (pts[:, :, 0] - a[:, 0:1])
+    side_prev = np.take_along_axis(side, prev_i, axis=1)
+    prev = np.take_along_axis(pts, prev_i[:, :, None], axis=1)
+    cur_in, prev_in = side >= 0, side_prev >= 0
+    denom = side - side_prev
+    with np.errstate(divide="ignore", invalid="ignore"):
+        t = np.where(np.abs(denom) > 1e-300, -side_prev / denom, 0.0)
+    cross_pt = prev + t[:, :, None] * (pts - prev)
+    # per input point: the edge crossing into/out of the plane, then the point
+    out = np.stack([cross_pt, pts], axis=2).reshape(t_n, 2 * m_n, 2)
+    keep = np.stack([(cur_in != prev_in) & live, cur_in & live], axis=2).reshape(t_n, 2 * m_n)
+    cnt = keep.sum(axis=1)
+    order = np.argsort(~keep, axis=1, kind="stable")[:, : max(int(cnt.max()), 1)]
+    return np.take_along_axis(out, order[:, :, None], axis=1), cnt
+
+
 def clip_convex(subject: np.ndarray, clipper: np.ndarray) -> np.ndarray:
-    """Sutherland-Hodgman: clip (possibly concave) subject by CONVEX clipper."""
+    """Sutherland-Hodgman: clip (possibly concave) subject by CONVEX clipper,
+    one :func:`clip_half_plane` step per clipper edge."""
     clipper = orient(open_ring(clipper), ccw=True)
-    output = open_ring(subject)
-    nc = len(clipper)
-    for i in range(nc):
-        if len(output) == 0:
+    pts = open_ring(subject)[None]
+    cnt = np.array([len(pts[0])])
+    for a, b in zip(clipper, np.roll(clipper, -1, axis=0)):
+        if cnt[0] == 0:
             break
-        a = clipper[i]
-        b = clipper[(i + 1) % nc]
-        edge = b - a
-        inp = output
-        prev = np.roll(inp, 1, axis=0)
-        side = edge[0] * (inp[:, 1] - a[1]) - edge[1] * (inp[:, 0] - a[0])
-        side_prev = edge[0] * (prev[:, 1] - a[1]) - edge[1] * (prev[:, 0] - a[0])
-        new_pts = []
-        for j in range(len(inp)):
-            cur_in = side[j] >= 0
-            prev_in = side_prev[j] >= 0
-            if cur_in != prev_in:
-                p0, p1 = prev[j], inp[j]
-                denom = side[j] - side_prev[j]
-                t = -side_prev[j] / denom if abs(denom) > 1e-300 else 0.0
-                new_pts.append(p0 + t * (p1 - p0))
-            if cur_in:
-                new_pts.append(inp[j])
-        output = np.asarray(new_pts, dtype=np.float64).reshape(-1, 2)
-    return output
+        pts, cnt = clip_half_plane(pts, cnt, a[None], (b - a)[None])
+    return pts[0, : cnt[0]]
 
 
 def is_convex(ring) -> bool:
@@ -305,43 +319,6 @@ def is_convex(ring) -> bool:
     e2 = np.roll(e, -1, axis=0)
     cross = e[:, 0] * e2[:, 1] - e[:, 1] * e2[:, 0]
     return not (np.any(cross > 0.0) and np.any(cross < 0.0))
-
-
-def convex_iou(ring_a, ring_b) -> float:
-    """EXACT IoU of two CONVEX rings: Sutherland-Hodgman clip + shoelace,
-    in the same equal-area Mollweide domain as :func:`raster_iou` (parity
-    with the reference's project-then-area chain,
-    /root/reference/robosat/spatial/core.py:56-77). Exact arithmetic — no
-    sampling grid, no quantization — so near-threshold dedupe verdicts
-    (keep/drop at 0.5) are stable. Used by operators.dedupe as the fast
-    path when exactly one convex candidate intersects; raster_iou_multi
-    remains the general-polygon fallback (cross-checked within 0.02 in
-    tests/test_kernels_geometry.py)."""
-    a = open_ring(as_ring(ring_a))
-    b = open_ring(as_ring(ring_b))
-    if len(a) < 3 or len(b) < 3:
-        return 0.0
-
-    def proj(r):
-        x, y = project_mollweide(r[:, 0], r[:, 1])
-        return np.column_stack([x, y])
-
-    pa, pb = proj(a), proj(b)
-    # local origin: projected coords are ~1e7 m while areas are tiny —
-    # without recentering the shoelace loses ~8 digits to cancellation
-    origin = pa.mean(axis=0)
-    pa = pa - origin
-    pb = pb - origin
-    area_a = abs(signed_area(pa))
-    area_b = abs(signed_area(pb))
-    inter_ring = clip_convex(pa, pb)
-    inter = abs(signed_area(inter_ring)) if len(inter_ring) >= 3 else 0.0
-    union = area_a + area_b - inter
-    if union <= 0.0:
-        return 0.0
-    iou = inter / union
-    assert -1e-12 <= iou <= 1.0 + 1e-12
-    return float(min(max(iou, 0.0), 1.0))
 
 
 def triangulate(ring) -> list | None:
@@ -425,7 +402,7 @@ def intersection_area(ring_a, ring_b) -> float | None:
     pts = np.broadcast_to(a, (len(tri), len(a), 2))
     cnt = np.full(len(tri), len(a))
     for e in range(3):
-        pts, cnt = _clip_half_plane(pts, cnt, tri[:, e], tri[:, (e + 1) % 3])
+        pts, cnt = clip_half_plane(pts, cnt, tri[:, e], tri[:, (e + 1) % 3] - tri[:, e])
     m = np.arange(pts.shape[1])
     nxt = np.where(m + 1 < cnt[:, None], m + 1, 0)
     x, y = pts[:, :, 0], pts[:, :, 1]
@@ -434,56 +411,20 @@ def intersection_area(ring_a, ring_b) -> float | None:
     return float(np.maximum(area[cnt >= 3], 0.0).sum())
 
 
-def _clip_half_plane(pts, cnt, a, b):
-    """One Sutherland-Hodgman step for T polygons at once: keep the part of
-    polygon t (its first ``cnt[t]`` points of ``pts``, (T, M, 2)) left of
-    the directed line a[t] -> b[t]. -> (points, counts), same layout."""
-    t_n, m_n = cnt.shape[0], pts.shape[1]
-    m = np.arange(m_n)
-    live = m < cnt[:, None]
-    prev_i = np.where(m > 0, m - 1, cnt[:, None] - 1).clip(0)
-    edge = b - a
-    side = edge[:, 0:1] * (pts[:, :, 1] - a[:, 1:2]) - edge[:, 1:2] * (pts[:, :, 0] - a[:, 0:1])
-    side_prev = np.take_along_axis(side, prev_i, axis=1)
-    prev = np.take_along_axis(pts, prev_i[:, :, None], axis=1)
-    cur_in, prev_in = side >= 0, side_prev >= 0
-    denom = side - side_prev
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.where(np.abs(denom) > 1e-300, -side_prev / denom, 0.0)
-    cross_pt = prev + t[:, :, None] * (pts - prev)
-    # per input point: the edge crossing into/out of the plane, then the point
-    out = np.stack([cross_pt, pts], axis=2).reshape(t_n, 2 * m_n, 2)
-    keep = np.stack([(cur_in != prev_in) & live, cur_in & live], axis=2).reshape(t_n, 2 * m_n)
-    cnt = keep.sum(axis=1)
-    order = np.argsort(~keep, axis=1, kind="stable")[:, : max(int(cnt.max()), 1)]
-    return np.take_along_axis(out, order[:, :, None], axis=1), cnt
-
-
 def exact_iou(rings_a, rings_b) -> float | None:
     """EXACT IoU of two simple polygons-with-holes in the equal-area
-    Mollweide domain (same projection as :func:`raster_iou` — reference
-    parity with robosat/spatial/core.py:56-77). Hole handling is
+    Mollweide domain (same projection as :func:`raster_iou_multi` —
+    reference parity with robosat/spatial/core.py:56-77). Hole handling is
     inclusion-exclusion: |A∩B| = |eA∩eB| - Σ|eA∩hB| - Σ|hA∩eB| + Σ|hA∩hB|
     (holes lie inside their exteriors and are disjoint — the contour
     tracer guarantees that shape). Returns None on degenerate
     triangulation; callers fall back to the supersampled raster IoU
     (cross-checked within 0.02 in tests)."""
-
-    def proj(rings):
-        out = []
-        for r in rings:
-            r = open_ring(as_ring(r))
-            if len(r) < 3:
-                continue
-            x, y = project_mollweide(r[:, 0], r[:, 1])
-            out.append(np.column_stack([x, y]))
-        return out
-
-    pa, pb = proj(rings_a), proj(rings_b)
+    pa, pb = _mollweide(rings_a), _mollweide(rings_b)
     if not pa or not pb:
         return 0.0
-    # recenter on a shared local origin (see convex_iou: shoelace on ~1e7 m
-    # coordinates with ~1e4 m² areas cancels catastrophically)
+    # recenter on a shared local origin: projected coordinates are ~1e7 m
+    # while areas are ~1e4 m², so the shoelace would lose ~8 digits
     origin = pa[0].mean(axis=0)
     pa = [r - origin for r in pa]
     pb = [r - origin for r in pb]
@@ -517,72 +458,20 @@ def exact_iou(rings_a, rings_b) -> float | None:
     return float(min(max(iou, 0.0), 1.0))
 
 
-def raster_iou(rings_a, rings_b, resolution: int = 512) -> float:
-    """IoU of two polygons-with-holes via supersampled grid in Mollweide.
+def raster_iou_multi(polys_a, polys_b, resolution: int = 512) -> float:
+    """IoU between two *sets* of polygons-with-holes (each side a union)
+    via a supersampled pixel-centre grid in Mollweide; two polygons are
+    ``raster_iou_multi([a], [b])``.
 
     General-polygon ``intersection.area / union.area`` replacement for
     /root/reference/robosat/spatial/core.py:56-77 (which projects through an
-    equal-area CRS first — we project to Mollweide the same way). Bounded
-    error ~ O(1/resolution); the reference only thresholds IoU and asserts
-    it lies in [0, 1], so bounded error is acceptable (SURVEY.md §7)."""
-
-    def proj(rings):
-        out = []
-        for r in rings:
-            r = open_ring(np.asarray(r, dtype=np.float64))
-            x, y = project_mollweide(r[:, 0], r[:, 1])
-            out.append(np.column_stack([x, y]))
-        return out
-
-    pa = [r for r in proj(rings_a) if len(r) >= 3]
-    pb = [r for r in proj(rings_b) if len(r) >= 3]
-    if not pa or not pb:
-        return 0.0
-    boxes = [ring_bbox(r) for r in (pa[:1] + pb[:1])]
-    minx = min(b[0] for b in boxes)
-    miny = min(b[1] for b in boxes)
-    maxx = max(b[2] for b in boxes)
-    maxy = max(b[3] for b in boxes)
-    if maxx <= minx or maxy <= miny:
-        return 0.0
-    # Pixel-center sample grid over the union bbox.
-    xs = np.linspace(minx, maxx, resolution, endpoint=False) + (maxx - minx) / resolution / 2
-    ys = np.linspace(miny, maxy, resolution, endpoint=False) + (maxy - miny) / resolution / 2
-    gx, gy = np.meshgrid(xs, ys)
-    gx, gy = gx.ravel(), gy.ravel()
-    in_a = points_in_polygon(gx, gy, pa)
-    in_b = points_in_polygon(gx, gy, pb)
-    union = np.count_nonzero(in_a | in_b)
-    if union == 0:
-        return 0.0
-    inter = np.count_nonzero(in_a & in_b)
-    iou = inter / union
-    assert 0.0 <= iou <= 1.0  # invariant from /root/reference/robosat/spatial/core.py:75
-    return float(iou)
-
-
-def raster_iou_multi(polys_a, polys_b, resolution: int = 512) -> float:
-    """IoU between two *sets* of polygons-with-holes (each side a union).
-
-    Generalizes :func:`raster_iou` for the dedupe join's union-of-matches
+    equal-area CRS first), over the dedupe join's union-of-matches
     (/root/reference/robosat/tools/dedupe.py:61: union of intersecting OSM
-    shapes before a single IoU)."""
-
-    def proj_all(polys):
-        out = []
-        for rings in polys:
-            pr = []
-            for r in rings:
-                r = open_ring(as_ring(r))
-                if len(r) < 3:
-                    continue
-                x, y = project_mollweide(r[:, 0], r[:, 1])
-                pr.append(np.column_stack([x, y]))
-            if pr:
-                out.append(pr)
-        return out
-
-    pa, pb = proj_all(polys_a), proj_all(polys_b)
+    shapes before a single IoU). Bounded error ~ O(1/resolution); the
+    reference only thresholds IoU and asserts it lies in [0, 1], so bounded
+    error is acceptable (SURVEY.md §7)."""
+    pa = [p for p in map(_mollweide, polys_a) if p]
+    pb = [p for p in map(_mollweide, polys_b) if p]
     if not pa or not pb:
         return 0.0
     allr = [p[0] for p in pa] + [p[0] for p in pb]
@@ -617,6 +506,19 @@ def polygon_area_m2(ring: np.ndarray) -> float:
 
     Parity with /root/reference/robosat/tools/merge.py:78-81 (shapely area
     in an equal-area projection, ``int(round(area))`` property)."""
-    r = open_ring(np.asarray(ring, dtype=np.float64))
-    x, y = project_mollweide(r[:, 0], r[:, 1])
-    return abs(signed_area(np.column_stack([x, y])))
+    rings = _mollweide([ring])
+    return abs(signed_area(rings[0])) if rings else 0.0
+
+
+def _mollweide(rings) -> list:
+    """Rings in lon/lat -> open (N, 2) rings in ESRI:54009 Mollweide
+    metres (the reference's equal-area domain), rings of fewer than 3
+    vertices dropped. Each ring is projected on its own: the Newton solve
+    runs until all points of its call converge."""
+    out = []
+    for r in rings:
+        r = open_ring(as_ring(r))
+        if len(r) >= 3:
+            x, y = project_mollweide(r[:, 0], r[:, 1])
+            out.append(np.column_stack([x, y]))
+    return out

@@ -4,7 +4,8 @@ rolling fingerprints. Vectorized NumPy; no Spark imports.
 These extend the reference's pipeline with the dedup/similarity operators a
 training-data pipeline needs (task brief); the reference's own dedupe is
 geometric IoU (/root/reference/robosat/tools/dedupe.py) — implemented in
-``kernels.geometry.raster_iou`` — while these cover the text side.
+``kernels.geometry.exact_iou`` and ``raster_iou_multi`` — while these
+cover the text side.
 """
 
 from __future__ import annotations

@@ -50,20 +50,28 @@ def mercator_to_lonlat(x, y):
     return lon, lat
 
 
-def lonlat_to_tile(lon, lat, zoom):
-    """(lon, lat, z) -> integer slippy tile (x, y).
-
-    Matches ``mercantile.tile``: x = floor((lon+180)/360 * 2^z),
-    y = floor((1 - asinh(tan(lat))/pi) / 2 * 2^z), clamped to the grid.
-    """
+def lonlat_to_tile_f(lon, lat, zoom):
+    """(lon, lat, z) -> continuous tile-grid coordinates (float x, y):
+    x = (lon+180)/360 * 2^z, y = (1 - asinh(tan(lat))/pi) / 2 * 2^z, with
+    lat clamped to the square mercator world."""
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.clip(np.asarray(lat, dtype=np.float64), -MERCATOR_LAT_LIMIT, MERCATOR_LAT_LIMIT)
     n = np.float64(2.0 ** zoom)
-    xt = np.floor((lon + 180.0) / 360.0 * n)
-    lat_rad = np.radians(lat)
-    yt = np.floor((1.0 - np.arcsinh(np.tan(lat_rad)) / np.pi) / 2.0 * n)
-    xt = np.clip(xt, 0, n - 1).astype(np.int64)
-    yt = np.clip(yt, 0, n - 1).astype(np.int64)
+    tx = (lon + 180.0) / 360.0 * n
+    ty = (1.0 - np.arcsinh(np.tan(np.radians(lat))) / np.pi) / 2.0 * n
+    return tx, ty
+
+
+def lonlat_to_tile(lon, lat, zoom):
+    """(lon, lat, z) -> integer slippy tile (x, y).
+
+    Matches ``mercantile.tile``: :func:`lonlat_to_tile_f` floored and
+    clamped to the grid.
+    """
+    n = 2.0 ** zoom
+    tx, ty = lonlat_to_tile_f(lon, lat, zoom)
+    xt = np.clip(np.floor(tx), 0, n - 1).astype(np.int64)
+    yt = np.clip(np.floor(ty), 0, n - 1).astype(np.int64)
     return xt, yt
 
 

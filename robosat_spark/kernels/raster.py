@@ -15,6 +15,7 @@ from __future__ import annotations
 import numpy as np
 
 from .geometry import open_ring
+from .mercator import lonlat_to_tile_f
 
 
 
@@ -303,7 +304,7 @@ def cover_rings(rings, zoom: int) -> np.ndarray:
         r = open_ring(np.asarray(ring, dtype=np.float64))
         if len(r) < 3:
             continue
-        tx, ty = _tile_coords_f(r[:, 0], r[:, 1], zoom)
+        tx, ty = lonlat_to_tile_f(r[:, 0], r[:, 1], zoom)
         poly = np.column_stack([tx, ty])
         polys.append(poly)
         # vectorized fast path (r7): an edge whose endpoints share a cell
@@ -340,16 +341,6 @@ def cover_rings(rings, zoom: int) -> np.ndarray:
         inner.update(zip((ix + x0).tolist(), (iy + y0).tolist()))
     tiles = sorted(edge_tiles | inner)
     return np.asarray(tiles, dtype=np.int64).reshape(-1, 2)
-
-
-def _tile_coords_f(lon, lat, zoom):
-    """Continuous tile-grid coordinates (float) of lon/lat points."""
-    n = np.float64(2.0 ** zoom)
-    lat = np.clip(np.asarray(lat, dtype=np.float64), -85.051128779806604, 85.051128779806604)
-    tx = (np.asarray(lon, dtype=np.float64) + 180.0) / 360.0 * n
-    lat_rad = np.radians(lat)
-    ty = (1.0 - np.arcsinh(np.tan(lat_rad)) / np.pi) / 2.0 * n
-    return tx, ty
 
 
 def _supercover(a, b):

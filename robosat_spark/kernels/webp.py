@@ -429,10 +429,6 @@ def _decode_image_stream(br: BitReaderLSB, w: int, h: int, is_level0: bool):
     return out, transforms
 
 
-def _avg2(a, b):
-    return ((a.astype(np.uint16) + b.astype(np.uint16)) >> 1).astype(np.uint8)
-
-
 def _apply_inverse_transforms(argb: np.ndarray, w: int, h: int, transforms) -> np.ndarray:
     """argb flat uint32 (possibly bundled-width) -> (h, w) uint32."""
     for t in reversed(transforms):

@@ -34,6 +34,7 @@ deterministic.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -142,10 +143,10 @@ def bpe_train_with_vocab(
                 F.col("enc"), F.lit(f" {lhs}  {rhs} "), F.lit(f" {lhs}{rhs} ")
             ),
         ).localCheckpoint()
-    return (
-        spark.createDataFrame(merges, "step INT, lhs STRING, rhs STRING, cnt LONG"),
-        enc,
-    )
+    schema = pa.schema([("step", pa.int32()), ("lhs", pa.string()), ("rhs", pa.string()),
+                        ("cnt", pa.int64())])
+    table = pa.Table.from_pylist([dict(zip(schema.names, m)) for m in merges], schema=schema)
+    return spark.createDataFrame(table), enc
 
 
 def bpe_sql(docs_rel: str, n_merges: int = 8) -> str:

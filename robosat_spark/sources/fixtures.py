@@ -202,7 +202,8 @@ def dense_polygon_rows(
 
 def tiles(spark: SparkSession, which: str = "parking") -> DataFrame:
     rows = PARKING_TILES_CSV if which == "parking" else TILES_CSV
-    return spark.createDataFrame(rows, "x INT, y INT, z INT")
+    cols = {k: pa.array(v, pa.int32()) for k, v in zip("xyz", zip(*rows))}
+    return spark.createDataFrame(pa.table(cols))
 
 
 def tiles_from_csv(spark: SparkSession, path: str) -> DataFrame:

@@ -119,10 +119,6 @@ def write_slippy_pngs(masks: DataFrame, root: str, palette: list[int] | None = N
         shutil.rmtree(old, ignore_errors=True)
 
 
-def read_slippy_grids(spark, root: str) -> DataFrame:
-    return spark.read.parquet(root)
-
-
 def throttled_idempotent_sink(
     df: DataFrame,
     write_one,

@@ -298,5 +298,5 @@ def test_exact_iou_properties(n, r0, r1, shift):
     assert abs(ab - ba) < 1e-9
     assert 0.0 <= ab <= 1.0
     assert abs(G.exact_iou([a], [a]) - 1.0) < 1e-12
-    rast = G.raster_iou([a], [b], resolution=512)
+    rast = G.raster_iou_multi([[a]], [[b]], resolution=512)
     assert abs(ab - rast) < 0.025, (ab, rast)

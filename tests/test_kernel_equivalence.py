@@ -3,8 +3,9 @@
 Each reference is the plain loop form of its kernel, kept here: a
 per-pixel even-odd test for the scanline burn, Suzuki-Abe's full
 raster-order scan for the border-pixel contour scan, the scalar ear test
-for ``triangulate`` and one ``clip_convex`` call per triangle for the
-batched ``intersection_area``.
+for ``triangulate``, and a per-point Sutherland-Hodgman loop for the
+batched ``clip_half_plane`` under ``clip_convex``, the convex buffer's
+inward offset and (one clip per triangle) ``intersection_area``.
 """
 
 import numpy as np
@@ -12,6 +13,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from robosat_spark.kernels import buffer as B
 from robosat_spark.kernels import geometry as G
 from robosat_spark.kernels import raster as R
 
@@ -194,8 +196,56 @@ def _triangulate_reference(ring):
     return tris
 
 
+def _half_plane_reference(poly, a, edge):
+    """One Sutherland-Hodgman step, point by point: the part of the open
+    ring ``poly`` left of the line through ``a`` along ``edge``."""
+    prev = np.roll(poly, 1, axis=0)
+    side = edge[0] * (poly[:, 1] - a[1]) - edge[1] * (poly[:, 0] - a[0])
+    side_prev = edge[0] * (prev[:, 1] - a[1]) - edge[1] * (prev[:, 0] - a[0])
+    out = []
+    for j in range(len(poly)):
+        cur_in, prev_in = side[j] >= 0, side_prev[j] >= 0
+        if cur_in != prev_in:
+            denom = side[j] - side_prev[j]
+            t = -side_prev[j] / denom if abs(denom) > 1e-300 else 0.0
+            out.append(prev[j] + t * (poly[j] - prev[j]))
+        if cur_in:
+            out.append(poly[j])
+    return np.asarray(out, dtype=np.float64).reshape(-1, 2)
+
+
+def _clip_reference(subject, clipper):
+    """Subject clipped by each edge of the counter-clockwise clipper."""
+    clipper = G.orient(G.open_ring(clipper), ccw=True)
+    out = G.open_ring(subject)
+    for i in range(len(clipper)):
+        if len(out) == 0:
+            break
+        a, b = clipper[i], clipper[(i + 1) % len(clipper)]
+        out = _half_plane_reference(out, a, b - a)
+    return out
+
+
+def _inward_buffer_reference(ring, d):
+    """The convex ring shrunk by ``d``: clipped by each edge moved inward."""
+    r = G.orient(G.open_ring(G.as_ring(ring)), ccw=True)
+    if len(r) < 3:
+        return []
+    out = r
+    for i in range(len(r)):
+        a, b = r[i], r[(i + 1) % len(r)]
+        e = b - a
+        length = float(np.hypot(e[0], e[1]))
+        if length < 1e-15:
+            continue
+        out = _half_plane_reference(out, a + np.array([-e[1], e[0]]) / length * d, e)
+        if len(out) < 3:
+            return []
+    return [G.close_ring(out)]
+
+
 def _area_reference(ring_a, ring_b):
-    """Sum of one ``clip_convex`` per triangle of B."""
+    """Sum of one reference clip per triangle of B."""
     a = G.orient(G.open_ring(G.as_ring(ring_a)), ccw=True)
     b = G.open_ring(G.as_ring(ring_b))
     if len(a) < 3 or len(b) < 3:
@@ -205,7 +255,7 @@ def _area_reference(ring_a, ring_b):
         return None
     total = 0.0
     for tri in tris:
-        out = G.clip_convex(a, tri)
+        out = _clip_reference(a, tri)
         if len(out) >= 3:
             total += max(G.signed_area(out), 0.0)
     return total
@@ -250,3 +300,39 @@ def test_intersection_area_equals_per_triangle_clip_sum(ring_a, ring_b):
         # an empty intersection may differ by rounding noise only
         scale = max(abs(want), abs(G.signed_area(ring_a)))
         assert abs(got - want) <= 1e-12 * scale
+
+
+@st.composite
+def _convex(draw):
+    """A convex ring: vertices at sorted angles on an ellipse, some of them
+    repeated (zero-length edges), optionally closed."""
+    n = draw(st.integers(3, 24))
+    cx, cy = draw(st.floats(-1, 1)), draw(st.floats(-1, 1))
+    rx, ry = draw(st.floats(0.5, 3.0)), draw(st.floats(0.5, 3.0))
+    ang = np.sort(draw(st.lists(st.floats(0, 2 * np.pi, exclude_max=True), min_size=n, max_size=n,
+                                unique=True)))
+    ring = np.column_stack([cx + rx * np.cos(ang), cy + ry * np.sin(ang)])
+    if draw(st.booleans()):
+        ring = np.repeat(ring, draw(st.lists(st.integers(1, 2), min_size=n, max_size=n)), axis=0)
+    if draw(st.booleans()):
+        ring = ring[::-1]
+    if draw(st.booleans()):
+        ring = G.close_ring(ring)
+    return ring
+
+
+@settings(max_examples=200, deadline=None)
+@given(_star(), _convex())
+def test_clip_convex_equals_per_point_clip(subject, clipper):
+    got, want = G.clip_convex(subject, clipper), _clip_reference(subject, clipper)
+    assert got.shape == want.shape
+    assert np.array_equal(got, want)
+
+
+@settings(max_examples=200, deadline=None)
+@given(_convex(), st.floats(0.0, 2.0, exclude_min=True))
+def test_inward_buffer_equals_per_point_clip(ring, d):
+    got, want = B.buffer_ring_exact(ring, -d), _inward_buffer_reference(ring, d)
+    assert len(got) == len(want)
+    for a, b in zip(got, want):
+        assert np.array_equal(a, b)

@@ -83,11 +83,11 @@ def test_raster_iou_known_values():
     # two unit-degree squares overlapping by half -> IoU = 1/3
     a = [np.array([[0, 0], [0.01, 0], [0.01, 0.01], [0, 0.01]], dtype=float)]
     b = [np.array([[0.005, 0], [0.015, 0], [0.015, 0.01], [0.005, 0.01]], dtype=float)]
-    iou = G.raster_iou(a, b, resolution=512)
+    iou = G.raster_iou_multi([a], [b], resolution=512)
     assert iou == pytest.approx(1.0 / 3.0, abs=0.01)
-    assert G.raster_iou(a, a) == pytest.approx(1.0, abs=0.01)
+    assert G.raster_iou_multi([a], [a]) == pytest.approx(1.0, abs=0.01)
     c = [np.array([[1, 1], [1.01, 1], [1.01, 1.01], [1, 1.01]], dtype=float)]
-    assert G.raster_iou(a, c) == 0.0
+    assert G.raster_iou_multi([a], [c]) == 0.0
 
 
 def test_polygon_area_parking_plausible():
@@ -110,25 +110,25 @@ def test_is_convex():
 
 
 def test_convex_iou_analytic_goldens_and_raster_crosscheck():
-    """The fixture's planted overlap fractions: exact clipping must hit the
-    analytic IoU t/(2-t) to float precision, and the supersampled raster
-    IoU must agree within 0.02 (the item-7 cross-check: raster is the
-    general-polygon fallback, exact clip the convex fast path)."""
+    """The fixture's planted overlap fractions on convex pairs: the exact
+    IoU must hit the analytic IoU t/(2-t) to float precision, and the
+    supersampled raster IoU must agree within 0.02 (the item-7
+    cross-check: raster is the fallback of the exact path)."""
     w, lat0 = 0.002, 34.666
     for idx, t in enumerate([0.0, 6.0 / 13.0, 22.0 / 31.0, 18.0 / 19.0]):
         lon0 = -82.806 + idx * 0.006
         a = np.array([[lon0, lat0], [lon0 + w, lat0], [lon0 + w, lat0 + w],
                       [lon0, lat0 + w], [lon0, lat0]])
         b = a + np.array([w * (1.0 - t), 0.0])
-        exact = G.convex_iou(a, b)
+        exact = G.exact_iou([a], [b])
         assert abs(exact - t / (2.0 - t)) < 1e-6, (t, exact)
-        rast = G.raster_iou([a], [b], resolution=512)
+        rast = G.raster_iou_multi([[a]], [[b]], resolution=512)
         assert abs(exact - rast) < 0.02, (t, exact, rast)
 
 
 def test_convex_iou_matches_raster_on_random_convex_pairs():
     """Random convex (ellipse-sampled) pairs at varied overlap: the exact
-    clip and the raster estimate stay within the 0.02 sampling bound."""
+    IoU and the raster estimate stay within the 0.02 sampling bound."""
     ang = np.linspace(0.0, 2.0 * np.pi, 24, endpoint=False)
     for k in range(6):
         cx = -82.8 + 0.001 * k
@@ -136,8 +136,8 @@ def test_convex_iou_matches_raster_on_random_convex_pairs():
         a = np.column_stack([cx + r1 * np.cos(ang), 34.7 + 0.7 * r1 * np.sin(ang)])
         shift = 0.0004 * k
         b = np.column_stack([cx + shift + r1 * np.cos(ang), 34.7 + 0.7 * r1 * np.sin(ang)])
-        exact = G.convex_iou(a, b)
-        rast = G.raster_iou([a], [b], resolution=512)
+        exact = G.exact_iou([a], [b])
+        rast = G.raster_iou_multi([[a]], [[b]], resolution=512)
         assert abs(exact - rast) < 0.02, (k, exact, rast)
         assert 0.0 <= exact <= 1.0
 
@@ -175,7 +175,7 @@ def test_exact_iou_concave_and_holed_vs_raster():
                      [lon0 + 2 * s, lat0 + 2 * s], [lon0, lat0 + 2 * s]])
     exact = G.exact_iou([lshape], [rect])
     assert exact is not None and abs(exact - 0.75) < 1e-3
-    rast = G.raster_iou([lshape], [rect], resolution=512)
+    rast = G.raster_iou_multi([[lshape]], [[rect]], resolution=512)
     assert abs(exact - rast) < 0.02
 
     # holed square vs the same square unholed: IoU = (1 - hole share)
@@ -185,9 +185,5 @@ def test_exact_iou_concave_and_holed_vs_raster():
                      [lon0 + 3 * s, lat0 + 3 * s], [lon0 + s, lat0 + 3 * s]])
     exact_h = G.exact_iou([outer, hole], [outer])
     assert exact_h is not None and abs(exact_h - 0.75) < 1e-3
-    rast_h = G.raster_iou([outer, hole], [outer], resolution=512)
+    rast_h = G.raster_iou_multi([[outer, hole]], [[outer]], resolution=512)
     assert abs(exact_h - rast_h) < 0.02
-
-    # agreement with the convex fast path on a convex pair
-    shifted = rect + np.array([s, 0.0])
-    assert abs(G.exact_iou([rect], [shifted]) - G.convex_iou(rect, shifted)) < 1e-12

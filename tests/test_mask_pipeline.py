@@ -55,7 +55,7 @@ def test_features_roundtrip_iou(spark, parking_features):
     truth = G.as_ring(parking_features.orderBy("feature_id").first()["rings"][0])
     w, s, e, n = tile_bounds(70762, 104119, 18)
     clipped = G.clip_convex(truth, np.array([[w, s], [e, s], [e, n], [w, n]]))
-    iou = G.raster_iou([clipped], [recovered[0]], resolution=512)
+    iou = G.raster_iou_multi([[clipped]], [[recovered[0]]], resolution=512)
     assert iou > 0.85, iou
 
 

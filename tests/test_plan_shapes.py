@@ -46,9 +46,16 @@ def _gate_plan(spark, name: str) -> list[str]:
     return df._jdf.queryExecution().executedPlan().toString().splitlines()
 
 
+def _tiles_plan(spark, which: str) -> list[str]:
+    from robosat_spark.sources.fixtures import tiles
+
+    return tiles(spark, which)._jdf.queryExecution().executedPlan().toString().splitlines()
+
+
 @pytest.mark.parametrize(
     "plan, name",
-    [(_plan, "pip_assign"), (_plan, "pip_assign_salted"), (_gate_plan, "halo_stitch")],
+    [(_plan, "pip_assign"), (_plan, "pip_assign_salted"), (_gate_plan, "halo_stitch"),
+     (_plan, "bpe_merges"), (_tiles_plan, "parking"), (_tiles_plan, "csv")],
 )
 def test_driver_constant_tables_are_local_scans(spark, plan, name):
     # tables built on the driver travel in the plan as a LocalTableScan;
